@@ -6,10 +6,10 @@ validate -> broadcast exact join -> band routing -> rollup) at sf0.001.
 SURVEY.md §2 with DuckDB oracle twins (see
 ``pyp_etl_pipeline_spark/driver_queries*.py``).
 
-Python workers deserialize pandas-UDF / mapInPandas / stateful functions
-by importing their defining module, and the harness may run with a cwd
-outside this repo — so the package is shipped to workers via
-``addPyFile`` (a zip built lazily, added once per SparkContext).
+Workers import the package because the session ships it:
+``session.ship_package`` adds a zip of it once per SparkContext, and
+every entry point here calls it, since the harness builds its own bare
+session and may run with a cwd outside this repo.
 """
 
 from __future__ import annotations
@@ -24,28 +24,13 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 from pyp_etl_pipeline_spark import driver_queries_ext as _reg  # noqa: E402
-
-_PKG_ZIP: str | None = None
+from pyp_etl_pipeline_spark.session import ship_package  # noqa: E402
 
 
 def _ensure_workers_can_import(spark: SparkSession) -> None:
     """Make ``pyp_etl_pipeline_spark`` importable inside Python workers
-    regardless of the harness cwd."""
-    global _PKG_ZIP
-    sc = spark.sparkContext
-    if getattr(sc, "_pyp_pkg_added", False):
-        return
-    if _PKG_ZIP is None or not os.path.exists(_PKG_ZIP):
-        import shutil  # noqa: PLC0415
-        import tempfile  # noqa: PLC0415
-
-        base = os.path.join(tempfile.gettempdir(), f"pyp_etl_pipeline_spark_pkg_{os.getpid()}")
-        _PKG_ZIP = shutil.make_archive(base, "zip", root_dir=REPO, base_dir="pyp_etl_pipeline_spark")
-    try:
-        sc.addPyFile(_PKG_ZIP)
-    except Exception:  # noqa: BLE001 — already added / context quirk; imports may still work via cwd
-        pass
-    sc._pyp_pkg_added = True
+    regardless of the harness cwd (see ``session.ship_package``)."""
+    ship_package(spark)
 
 
 def entry(spark: SparkSession) -> DataFrame:

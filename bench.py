@@ -270,9 +270,19 @@ def main() -> None:
     # trajectory across the long extended pass, so per-query readings can
     # be judged against the contention at the moment they ran (r14)
     ext_canaries: list[float] = []
+
+    def canary() -> float:
+        # a failed canary records -1, as a failed query does, instead of
+        # losing the whole run
+        try:
+            return round(run_one(spark, "w01_tumbling_hourly", sf_dir), 3)
+        except Exception as exc:  # noqa: BLE001 — keep the harness alive
+            print(f"bench: w01 canary FAILED: {type(exc).__name__}: {exc}", file=sys.stderr)
+            return -1.0
+
     for i, name in enumerate(EXTENDED):
         if i % 25 == 0:
-            ext_canaries.append(round(run_one(spark, "w01_tumbling_hourly", sf_dir), 3))
+            ext_canaries.append(canary())
         iters_n = max(ext_iters, 3) if name in EXTENDED_HEAVY else ext_iters
         try:
             run_one(spark, name, warm_dir)
@@ -280,7 +290,7 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001
             print(f"bench: {name} FAILED: {type(exc).__name__}: {exc}", file=sys.stderr)
             extended[name] = -1.0
-    ext_canaries.append(round(run_one(spark, "w01_tumbling_hourly", sf_dir), 3))
+    ext_canaries.append(canary())
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]

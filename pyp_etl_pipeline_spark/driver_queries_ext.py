@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from pyp_etl_pipeline_spark import driver_queries as core
 from pyp_etl_pipeline_spark.functions import scoring
+from pyp_etl_pipeline_spark.multimodal.rowmap import synth_media
 from pyp_etl_pipeline_spark.operators import dedup, resolve, similarity, textan, windows
 from pyp_etl_pipeline_spark.operators.similarity import _hyperplanes
 from pyp_etl_pipeline_spark.tables import load_table
@@ -1889,31 +1890,15 @@ def mm06_audio_features(spark: SparkSession, sf: str) -> DataFrame:
     feature analytically predictable from doc_id, so the DuckDB twin
     recomputes ZCR/peak/RMS/duration in closed form — an endianness,
     sign, or off-by-one bug in the PCM path breaks the hash."""
-    import pandas as pd  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.multimodal.binary_ops import decode_features  # noqa: PLC0415
+    from pyp_etl_pipeline_spark.multimodal.codecs import wav_encode_pcm16  # noqa: PLC0415
 
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import REPO_ROOT, decode_features  # noqa: PLC0415
+    def ramp_clip(i: int) -> bytes:
+        k = 1 + i % 7
+        return wav_encode_pcm16([(((j * k) % 256) - 128) * 64 for j in range(100 + i % 50)], 8000)
 
     d = load_table(spark, sf, "documents").select("doc_id").filter(F.col("doc_id") % 2 == 1)
-    repo_root = REPO_ROOT
-
-    def synth(batches):
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.codecs import wav_encode_pcm16  # noqa: PLC0415
-
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                k = 1 + i % 7
-                n = 100 + i % 50
-                samples = [(((j * k) % 256) - 128) * 64 for j in range(n)]
-                payloads.append(wav_encode_pcm16(samples, 8000))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = d.mapInPandas(synth, "media_id long, payload binary")
+    media = synth_media(d, ramp_clip)
     out = decode_features(media)
     return out.select(
         "media_id",
@@ -3676,92 +3661,64 @@ REGISTRY.update(_ext4.QUERIES4)
 # check keeps aging. Duplicates further down are harmless: dict
 # insertion keeps the FIRST occurrence's position.
 _DRIVER_PRIORITY = [
-    # round-13 rotation — generated by tools/rotate_window.py (paste,
-    # don't hand-edit; the uniqueness/resolvability test pins the
-    # invariants). Head: 2 NEW queries (mm21/mm22 VP9 tier — a new
-    # query never waits a round for driver evidence) + 2 changed-code
-    # re-certs (xl01/xl02: sidecar cluster-mode guard + post-sheetData
-    # scan stop). Backfill: the whole r7 tier (w06/ws01/wz01) then the
-    # r8 tier stalest-first per VERDICT r12 item 1; 4 r9 rows enter,
-    # the rest defer to r14.
-    # proposed window (50 slots): 4 changed + 0 red-latest + 0 new + 46 stalest-first backfill
-    "mm21_vp9_frame_metadata",  # evidence r—
-    "mm22_mp4_vpcc_qa",  # evidence r—
-    "xl01_xlsx_roundtrip",  # evidence r12
-    "xl02_xlsx_sidecar_roundtrip",  # evidence r12
-    "w06_group_zscores",  # evidence r7
-    "ws01_weighted_sample",  # evidence r7
-    "wz01_winsorized_stats",  # evidence r7
-    "ann05_pq_topk",  # evidence r8
-    "ann06_ivfpq_topk",  # evidence r8
-    "ann07_ivfpq_refine_topk",  # evidence r8
-    "bfs01_reach_levels",  # evidence r8
-    "br01_boolean_retrieval",  # evidence r8
-    "cf01_cascade_filter",  # evidence r8
-    "cu01_curriculum_schedule",  # evidence r8
-    "dc03_semantic_decontaminate",  # evidence r8
-    "dd08_dedup_savings",  # evidence r8
-    "ev02_ann_recall",  # evidence r8
-    "ev04_gate_calibration",  # evidence r8
-    "ev05_gate_kappa",  # evidence r8
-    "ev06_quality_auc",  # evidence r8
-    "fh01_feature_hashing",  # evidence r8
-    "gr01_pagerank",  # evidence r8
-    "gr02_star_components",  # evidence r8
-    "gs01_grouping_sets",  # evidence r8
-    "hn01_hard_negatives",  # evidence r8
-    "im01_class_weight_plan",  # evidence r8
-    "ka01_k_anonymity",  # evidence r8
-    "mk01_mlm_masking_plan",  # evidence r8
-    "mm12_gif_decode",  # evidence r8
-    "mm13_gif_animation_frames",  # evidence r8
-    "mm14_resized_thumbs",  # evidence r8
-    "mx02_token_budget_fill",  # evidence r8
-    "mx03_temperature_mixture",  # evidence r8
-    "pb01_padding_efficiency",  # evidence r8
-    "pk01_sequence_packing",  # evidence r8
-    "px03_pii_density",  # evidence r8
-    "q07_promo_revenue_share",  # evidence r8
-    "q08_idle_customers",  # evidence r8
-    "qn01_int8_quantize",  # evidence r8
-    "rp01_corpus_datacard",  # evidence r8
-    "sa01_skew_audit",  # evidence r8
-    "sp03_group_safe_split",  # evidence r8
-    "tk03_vocab_coverage",  # evidence r8
-    "tk04_vocab_coverage_curve",  # evidence r8
-    "tx17_url_normalize",  # evidence r8
-    "uv01_unpivot_part_attrs",  # evidence r8
-    "a02_member_rollup",  # evidence r9
-    "a03_push_summary",  # evidence r9
-    "a05_error_summary_24h",  # evidence r9
-    "a07_status_priority_rollup",  # evidence r9
+    # generated by tools/rotate_window.py (paste, don't hand-edit; the
+    # uniqueness/resolvability test pins the invariants). Head: 25
+    # changed-code re-certs — mm01-mm22 (every per-row media operator now
+    # runs on multimodal/rowmap), xl01/xl02 (read_excel_distributed's
+    # worker functions) and pp02 (consumes mm10). Backfill: the r9 tier
+    # stalest-first.
+    # proposed window (50 slots): 25 changed + 0 red-latest + 0 new + 25 stalest-first backfill
+    "mm01_media_features",  # evidence r10
+    "mm02_media_decode",  # evidence r11
+    "mm03_jpeg_decode",  # evidence r11
+    "mm04_frame_sample_plan",  # evidence r9
+    "mm05_mp4_metadata",  # evidence r11
+    "mm06_audio_features",  # evidence r11
+    "mm07_mjpeg_frames",  # evidence r12
+    "mm08_hadamard_spectrum",  # evidence r12
+    "mm09_image_dhash",  # evidence r12
+    "mm10_image_neardup_pairs",  # evidence r12
+    "mm11_audio_fingerprint_groups",  # evidence r12
+    "mm12_gif_decode",  # evidence r14
+    "mm13_gif_animation_frames",  # evidence r14
+    "mm14_resized_thumbs",  # evidence r14
+    "mm15_h264_sps_metadata",  # evidence r12
+    "mm16_mp4_avcc_qa",  # evidence r12
+    "mm17_hevc_sps_metadata",  # evidence r12
+    "mm18_mp4_hvcc_qa",  # evidence r12
+    "mm19_av1_seq_metadata",  # evidence r12
+    "mm20_mp4_av1c_qa",  # evidence r12
+    "mm21_vp9_frame_metadata",  # evidence r14
+    "mm22_mp4_vpcc_qa",  # evidence r14
+    "xl01_xlsx_roundtrip",  # evidence r14
+    "xl02_xlsx_sidecar_roundtrip",  # evidence r14
+    "pp02_multimodal_curation",  # evidence r12
+    "a10_length_histogram",  # evidence r9
+    "ab01_ab_test_readout",  # evidence r9
+    "ann08_int8_topk",  # evidence r9
+    "cd02_apply_changefeed",  # evidence r9
+    "dc01_decontaminate",  # evidence r9
+    "dd01_exact_dup_histogram",  # evidence r9
+    "dd10_exact_substring_spans",  # evidence r9
+    "dm01_label_centroid_cosine",  # evidence r9
+    "dp01_noisy_counts",  # evidence r9
+    "e03_crosslink_dedup",  # evidence r9
+    "ex02_export_roundtrip",  # evidence r9
+    "ex03_jsonl_roundtrip",  # evidence r9
+    "f03_name_email_validation",  # evidence r9
+    "f05_country_whitelist",  # evidence r9
+    "fm01_orc_roundtrip",  # evidence r9
+    "hh01_threshold_heavy_hitters",  # evidence r9
+    "ka02_l_diversity",  # evidence r9
+    "ks01_keep_best_per_cluster",  # evidence r9
+    "o01_topk_orders_per_customer",  # evidence r9
+    "o04_latest_order_per_customer",  # evidence r9
+    "o07_distinct_sorted_filters",  # evidence r9
+    "p01_header_mapping",  # evidence r9
+    "pt01_partition_pruned_rollup",  # evidence r9
+    "q09_priority_with_returns",  # evidence r9
+    "q10_returned_revenue_topk",  # evidence r9
     # ---- end of the 50-slot driver window ----
-    "a10_length_histogram",
-    "ab01_ab_test_readout",
-    "ann08_int8_topk",
-    "cd02_apply_changefeed",
-    "dc01_decontaminate",
-    "dd01_exact_dup_histogram",
-    "dd10_exact_substring_spans",
-    "dm01_label_centroid_cosine",
-    "dp01_noisy_counts",
-    "e03_crosslink_dedup",
-    "ex02_export_roundtrip",
-    "ex03_jsonl_roundtrip",
-    "f03_name_email_validation",
-    "f05_country_whitelist",
-    "fm01_orc_roundtrip",
-    "hh01_threshold_heavy_hitters",
-    "ka02_l_diversity",
-    "ks01_keep_best_per_cluster",
-    "mm04_frame_sample_plan",
-    "o01_topk_orders_per_customer",
-    "o04_latest_order_per_customer",
-    "o07_distinct_sorted_filters",
-    "p01_header_mapping",
-    "pt01_partition_pruned_rollup",
-    "q09_priority_with_returns",
-    "q10_returned_revenue_topk",
     "se01_schema_evolution",
     "sh01_simhash_pairs",
     "sp01_hash_split",
@@ -3800,7 +3757,6 @@ _DRIVER_PRIORITY = [
     "j12_canonical_backfill",
     "j13_reject_payload",
     "ml01_linear_trend",
-    "mm01_media_features",
     "q01_pricing_summary",
     "q02_top_revenue_orders",
     "q03_region_revenue",
@@ -3840,10 +3796,6 @@ _DRIVER_PRIORITY = [
     "j15_live_uid_fallback",
     "j16_point_in_time_status",
     "js01_json_extract_rollup",
-    "mm02_media_decode",
-    "mm03_jpeg_decode",
-    "mm05_mp4_metadata",
-    "mm06_audio_features",
     "mx01_corpus_mixture",
     "nd01_embed_neardup",
     "pp01_pretraining_pipeline",
@@ -3889,20 +3841,8 @@ _DRIVER_PRIORITY = [
     "gt01_grand_total_wide",
     "ia01_incremental_rollup",
     "ii01_inverted_index",
-    "mm07_mjpeg_frames",
-    "mm08_hadamard_spectrum",
-    "mm09_image_dhash",
-    "mm10_image_neardup_pairs",
-    "mm11_audio_fingerprint_groups",
-    "mm15_h264_sps_metadata",
-    "mm16_mp4_avcc_qa",
-    "mm17_hevc_sps_metadata",
-    "mm18_mp4_hvcc_qa",
-    "mm19_av1_seq_metadata",
-    "mm20_mp4_av1c_qa",
     "o08_keyset_pagination",
     "pf01_table_profile",
-    "pp02_multimodal_curation",
     "q06_large_volume_customers",
     "qt01_histogram_quantiles",
     "st08_stream_static_enrich",
@@ -3916,7 +3856,50 @@ _DRIVER_PRIORITY = [
     "u05_status_set_ops",
     "u06_multiset_ops",
     "w05_ntile_quartiles",
-    # tail: 180 queries; oldest deferred evidence tier: r9 (39 queries)
+    "a02_member_rollup",
+    "a03_push_summary",
+    "a05_error_summary_24h",
+    "a07_status_priority_rollup",
+    "ann05_pq_topk",
+    "ann06_ivfpq_topk",
+    "ann07_ivfpq_refine_topk",
+    "bfs01_reach_levels",
+    "br01_boolean_retrieval",
+    "cf01_cascade_filter",
+    "cu01_curriculum_schedule",
+    "dc03_semantic_decontaminate",
+    "dd08_dedup_savings",
+    "ev02_ann_recall",
+    "ev04_gate_calibration",
+    "ev05_gate_kappa",
+    "ev06_quality_auc",
+    "fh01_feature_hashing",
+    "gr01_pagerank",
+    "gr02_star_components",
+    "gs01_grouping_sets",
+    "hn01_hard_negatives",
+    "im01_class_weight_plan",
+    "ka01_k_anonymity",
+    "mk01_mlm_masking_plan",
+    "mx02_token_budget_fill",
+    "mx03_temperature_mixture",
+    "pb01_padding_efficiency",
+    "pk01_sequence_packing",
+    "px03_pii_density",
+    "q07_promo_revenue_share",
+    "q08_idle_customers",
+    "qn01_int8_quantize",
+    "rp01_corpus_datacard",
+    "sa01_skew_audit",
+    "sp03_group_safe_split",
+    "tk03_vocab_coverage",
+    "tk04_vocab_coverage_curve",
+    "tx17_url_normalize",
+    "uv01_unpivot_part_attrs",
+    "w06_group_zscores",
+    "ws01_weighted_sample",
+    "wz01_winsorized_stats",
+    # tail: 180 queries; oldest deferred evidence tier: r9 (13 queries)
 ]
 
 REGISTRY = {

@@ -37,11 +37,15 @@ pin it the way test_h264's x264 golden is pinned.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 
+from pyp_etl_pipeline_spark.multimodal.codecs import (
+    find_sample_entry_record,
+    mp4_decode,
+    with_dims_match,
+)
 from pyp_etl_pipeline_spark.multimodal.h264 import _BitReader, _BitWriter
+from pyp_etl_pipeline_spark.multimodal.rowmap import row_map
 
 OBU_SEQUENCE_HEADER = 1
 OBU_TEMPORAL_DELIMITER = 2
@@ -330,61 +334,19 @@ def av1_sequence_header_parse(payload: bytes) -> dict:
     }
 
 
-_AV1_NULL = {
-    "seq_profile": None, "seq_level_idx": None, "seq_tier": None, "width": None,
-    "height": None, "bit_depth": None, "mono_chrome": None,
-    "chroma_sub_x": None, "chroma_sub_y": None, "fps": None,
-}
-
-
 def av1_seq_features(df: DataFrame, permissive: bool = False) -> DataFrame:
     """DataFrame operator: (media_id long, payload binary) -> parsed AV1
     sequence-header metadata. Arrow-batched ``mapInPandas``, map-only —
     same 100 TB shape and ``permissive`` quarantine contract as the
     H.264/HEVC feature operators."""
-    import os  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
-
-    repo_root = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", ".."))
-
-    def op(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.av1 import (  # noqa: PLC0415
-            _AV1_NULL,
-            av1_sequence_header_parse,
-        )
-
-        for pdf in batches:
-            rows, errs = [], []
-            for p in pdf["payload"]:
-                if permissive:
-                    try:
-                        rows.append(av1_sequence_header_parse(bytes(p)))
-                        errs.append(None)
-                    except Exception as exc:  # noqa: BLE001 — per-row quarantine
-                        rows.append(dict(_AV1_NULL))
-                        errs.append(f"{type(exc).__name__}: {exc}")
-                else:
-                    rows.append(av1_sequence_header_parse(bytes(p)))
-            out = {"media_id": pdf["media_id"]}
-            for k in _AV1_NULL:
-                out[k] = [r[k] for r in rows]
-            if permissive:
-                out["error"] = errs
-            yield pd.DataFrame(out)
-
-    schema = (
+    return row_map(
+        df,
+        lambda _mid, p: [av1_sequence_header_parse(bytes(p))],
         "media_id long, seq_profile int, seq_level_idx int, seq_tier int, "
         "width int, height int, bit_depth int, mono_chrome int, "
-        "chroma_sub_x int, chroma_sub_y int, fps double"
+        "chroma_sub_x int, chroma_sub_y int, fps double",
+        permissive,
     )
-    if permissive:
-        schema += ", error string"
-    return df.mapInPandas(op, schema)
 
 
 # --------------------------------------------------- av1C-in-MP4 (mm20)
@@ -523,38 +485,8 @@ def mp4_av1c_extract(payload: bytes) -> dict:
     """Walk a real MP4's box tree to the av1C record, parse its embedded
     sequence header, and return stream metadata alongside the
     container's tkhd display dims for cross-validation."""
-    from pyp_etl_pipeline_spark.multimodal.codecs import (  # noqa: PLC0415
-        _iter_boxes,
-        mp4_decode,
-    )
-
     meta = mp4_decode(payload)
-    rec = None
-    moov = None
-    for tag, body, boxend in _iter_boxes(payload, 0, len(payload)):
-        if tag == b"moov":
-            moov = (body, boxend)
-    if moov is None:
-        raise ValueError("no moov box")
-
-    def walk(span):
-        nonlocal rec
-        for tag, body, boxend in _iter_boxes(payload, *span):
-            if rec is not None:
-                return
-            if tag == b"av1C":
-                rec = payload[body:boxend]
-            elif tag in (b"trak", b"mdia", b"minf", b"stbl"):
-                walk((body, boxend))
-            elif tag == b"stsd":
-                walk((body + 8, boxend))
-            elif tag == b"av01":
-                walk((body + 78, boxend))
-
-    walk(moov)
-    if rec is None:
-        raise ValueError("no av1C record in any sample entry")
-    sps = av1c_parse(rec)
+    sps = av1c_parse(find_sample_entry_record(payload, (b"av01",), b"av1C"))
     return {
         "container_width": meta["width"],
         "container_height": meta["height"],
@@ -563,75 +495,15 @@ def mp4_av1c_extract(payload: bytes) -> dict:
     }
 
 
-_AV1C_NULL = {
-    "container_width": None, "container_height": None, "duration_ms": None,
-    "seq_profile": None, "seq_level_idx": None, "seq_tier": None,
-    "width": None, "height": None, "bit_depth": None, "fps": None,
-    "record_matches": None,
-}
-
-
 def av1_container_features(df: DataFrame, permissive: bool = False) -> DataFrame:
     """DataFrame operator: (media_id long, payload binary MP4) ->
     container + AV1 stream metadata with dims_match and record_matches
     QA flags — the AV1 mirror of the avc/hevc container operators."""
-    import os  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
-
-    repo_root = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", ".."))
-
-    def op(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.av1 import _AV1C_NULL, mp4_av1c_extract  # noqa: PLC0415
-
-        for pdf in batches:
-            rows, errs = [], []
-            for p in pdf["payload"]:
-                if permissive:
-                    try:
-                        rows.append(mp4_av1c_extract(bytes(p)))
-                        errs.append(None)
-                    except Exception as exc:  # noqa: BLE001 — per-row quarantine
-                        rows.append(dict(_AV1C_NULL))
-                        errs.append(f"{type(exc).__name__}: {exc}")
-                else:
-                    rows.append(mp4_av1c_extract(bytes(p)))
-            out = {
-                "media_id": pdf["media_id"],
-                "container_width": [r["container_width"] for r in rows],
-                "container_height": [r["container_height"] for r in rows],
-                "duration_ms": [r["duration_ms"] for r in rows],
-                "seq_profile": [r["seq_profile"] for r in rows],
-                "seq_level_idx": [r["seq_level_idx"] for r in rows],
-                "seq_tier": [r["seq_tier"] for r in rows],
-                "width": [r["width"] for r in rows],
-                "height": [r["height"] for r in rows],
-                "bit_depth": [r["bit_depth"] for r in rows],
-                "fps": [r["fps"] for r in rows],
-                "record_matches": [r["record_matches"] for r in rows],
-                "dims_match": [
-                    None
-                    if r["width"] is None
-                    else (
-                        r["container_width"] == r["width"]
-                        and r["container_height"] == r["height"]
-                    )
-                    for r in rows
-                ],
-            }
-            if permissive:
-                out["error"] = errs
-            yield pd.DataFrame(out)
-
-    schema = (
+    return row_map(
+        df,
+        lambda _mid, p: [with_dims_match(mp4_av1c_extract(bytes(p)))],
         "media_id long, container_width int, container_height int, duration_ms double, "
         "seq_profile int, seq_level_idx int, seq_tier int, width int, height int, "
-        "bit_depth int, fps double, record_matches boolean, dims_match boolean"
+        "bit_depth int, fps double, record_matches boolean, dims_match boolean",
+        permissive,
     )
-    if permissive:
-        schema += ", error string"
-    return df.mapInPandas(op, schema)

@@ -1,8 +1,9 @@
 """Multimodal column operators: opaque binary payloads + typed metadata.
 
 Image/audio/video payloads are ``binary`` columns with a typed metadata
-struct, processed in Arrow-batched ``mapInPandas`` (partition-preserving,
-batch-vectorized — the shape a PIL/libav decoder would use).
+struct. Every operator here is a per-row function run through
+``rowmap.row_map`` — Arrow-batched ``mapInPandas``, partition-preserving,
+the shape a PIL/libav decoder would use.
 
 Two decode paths:
 - REAL: PNG (gray8/rgb8), WAV (PCM16) and JPEG decode in pure python +
@@ -26,10 +27,11 @@ Two decode paths:
 
 from __future__ import annotations
 
-import os
-from collections.abc import Iterator
+import hashlib
+import struct
+import zlib
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -40,6 +42,9 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from pyp_etl_pipeline_spark.multimodal import codecs, plugins
+from pyp_etl_pipeline_spark.multimodal.rowmap import row_map
 
 MEDIA_SCHEMA = StructType(
     [
@@ -65,19 +70,11 @@ FEATURE_SCHEMA = (
     "byte_stat0 double, byte_stat1 double"
 )
 
-# Repo root as a PLAIN STRING: worker-side closures capture it (strings
-# pickle by value) and bootstrap sys.path before importing this package —
-# the harness may launch executors from a cwd where the repo isn't
-# importable, and a bare in-closure import would ModuleNotFoundError.
-REPO_ROOT = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", ".."))
-
 
 def decode_real(payload: bytes, kind: str) -> dict:
     """Real decode for the formats the pure-python codecs cover (PNG,
     WAV), dispatched on magic bytes; other formats still need external
     codecs that are not in this container."""
-    from pyp_etl_pipeline_spark.multimodal import codecs  # noqa: PLC0415
-
     fmt = codecs.sniff_kind(payload or b"")
     if fmt == "png":
         return {"format": "png", **codecs.png_decode(payload)}
@@ -98,8 +95,6 @@ def decode_real(payload: bytes, kind: str) -> dict:
         # video decode path (see sample_frames_decoded) — no libav.
         meta = codecs.avi_mjpeg_decode(payload)
         return {"format": "avi", **{k: v for k, v in meta.items() if k != "frames"}}
-    from pyp_etl_pipeline_spark.multimodal import plugins  # noqa: PLC0415
-
     decoder = plugins.get_video_decoder(fmt) if fmt else None
     if decoder is not None:
         # a registered backend (see multimodal/plugins.py — e.g. PyAV on
@@ -137,65 +132,46 @@ def decode_features(df: DataFrame) -> DataFrame:
     rather than failing the batch (a 100 TB corpus always contains
     strays)."""
 
-    repo_root = REPO_ROOT
+    def decode(_mid, payload):
+        p = bytes(payload) if payload is not None else b""
+        fmt = codecs.sniff_kind(p)
+        row = {"format": fmt}
+        # magic bytes don't guarantee a well-formed body: a
+        # truncated/desynced payload raises from the codec, and
+        # the contract is null features per stray row, never a
+        # failed Arrow batch
+        try:
+            if fmt == "png":
+                d = codecs.png_decode(p)
+                row.update(width=d["width"], height=d["height"], mean_val=d["mean_val"])
+            elif fmt == "wav":
+                d = codecs.wav_decode(p)
+                row.update(duration_ms=d["duration_ms"], rms=d["rms"], zcr=d["zcr"], peak=d["peak"])
+            elif fmt == "jpeg":
+                d = codecs.jpeg_decode(p)
+                row.update(width=d["width"], height=d["height"], mean_val=d["mean_val"])
+            elif fmt == "mp4":
+                d = codecs.mp4_decode(p)
+                row.update(width=d["width"], height=d["height"], duration_ms=d["duration_ms"])
+            elif fmt == "avi":
+                d = codecs.avi_mjpeg_decode(p)
+                row.update(width=d["width"], height=d["height"], duration_ms=d["duration_ms"])
+            elif fmt == "gif":
+                d = codecs.gif_decode(p)
+                row.update(width=d["width"], height=d["height"], mean_val=d["mean_val"])
+        except (ValueError, IndexError, KeyError, EOFError, struct.error, zlib.error):
+            pass
+        return [row]
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct  # noqa: PLC0415
-        import sys  # noqa: PLC0415
-        import zlib  # noqa: PLC0415
+    return row_map(df, decode, DECODE_SCHEMA)
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal import codecs  # noqa: PLC0415
 
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                p = bytes(payload) if payload is not None else b""
-                fmt = codecs.sniff_kind(p)
-                row = {
-                    "media_id": mid,
-                    "format": fmt,
-                    "width": None,
-                    "height": None,
-                    "duration_ms": None,
-                    "mean_val": None,
-                    "rms": None,
-                    "zcr": None,
-                    "peak": None,
-                }
-                # magic bytes don't guarantee a well-formed body: a
-                # truncated/desynced payload raises from the codec, and
-                # the contract is null features per stray row, never a
-                # failed Arrow batch
-                try:
-                    if fmt == "png":
-                        d = codecs.png_decode(p)
-                        row.update(width=d["width"], height=d["height"], mean_val=d["mean_val"])
-                    elif fmt == "wav":
-                        d = codecs.wav_decode(p)
-                        row.update(
-                            duration_ms=d["duration_ms"], rms=d["rms"],
-                            zcr=d["zcr"], peak=d["peak"],
-                        )
-                    elif fmt == "jpeg":
-                        d = codecs.jpeg_decode(p)
-                        row.update(width=d["width"], height=d["height"], mean_val=d["mean_val"])
-                    elif fmt == "mp4":
-                        d = codecs.mp4_decode(p)
-                        row.update(width=d["width"], height=d["height"], duration_ms=d["duration_ms"])
-                    elif fmt == "avi":
-                        d = codecs.avi_mjpeg_decode(p)
-                        row.update(width=d["width"], height=d["height"], duration_ms=d["duration_ms"])
-                    elif fmt == "gif":
-                        d = codecs.gif_decode(p)
-                        row.update(width=d["width"], height=d["height"], mean_val=d["mean_val"])
-                except (ValueError, IndexError, KeyError, EOFError, struct.error, zlib.error):
-                    pass
-                rows.append(row)
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(op, schema=DECODE_SCHEMA)
+def _weighted_stats(pixels: np.ndarray) -> tuple[int, int]:
+    """(sum, position-weighted checksum sum((i+1) * p_i) mod 1e9+7) over
+    the row-major pixels."""
+    flat = pixels.astype(np.int64).reshape(-1)
+    weights = np.arange(1, flat.size + 1, dtype=np.int64)
+    return int(flat.sum()), int((weights * flat).sum() % 1_000_000_007)
 
 
 def gif_pixel_stats(df: DataFrame) -> DataFrame:
@@ -208,55 +184,16 @@ def gif_pixel_stats(df: DataFrame) -> DataFrame:
     decoder that produces the right multiset of pixels in the wrong
     places (transposed rows, shifted scanlines). NULL payloads and
     malformed bodies yield NULL stats (tolerant reader)."""
-    repo_root = REPO_ROOT
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct  # noqa: PLC0415
-        import sys  # noqa: PLC0415
+    def stats(_mid, payload):
+        try:
+            px, w, h = codecs.gif_decode_pixels(bytes(payload))
+        except (TypeError, ValueError, IndexError, struct.error):
+            return [{}]
+        total, checksum = _weighted_stats(px)
+        return [{"width": w, "height": h, "sum_pixels": total, "checksum": checksum}]
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        import numpy as np  # noqa: PLC0415
-
-        from pyp_etl_pipeline_spark.multimodal import codecs  # noqa: PLC0415
-
-        mod = 1_000_000_007
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                row = {
-                    "media_id": mid,
-                    "width": None,
-                    "height": None,
-                    "sum_pixels": None,
-                    "checksum": None,
-                }
-                try:
-                    px, w, h = codecs.gif_decode_pixels(bytes(payload))
-                    flat = px.astype(np.int64).reshape(-1)
-                    weights = np.arange(1, flat.size + 1, dtype=np.int64)
-                    row.update(
-                        width=w,
-                        height=h,
-                        sum_pixels=int(flat.sum()),
-                        checksum=int((weights * flat).sum() % mod),
-                    )
-                except (TypeError, ValueError, IndexError, struct.error):
-                    pass
-                rows.append(row)
-            yield pd.DataFrame(rows).astype(
-                {
-                    "width": "Int32",
-                    "height": "Int32",
-                    "sum_pixels": "Int64",
-                    "checksum": "Int64",
-                }
-            )
-
-    return df.mapInPandas(
-        op,
-        schema="media_id long, width int, height int, sum_pixels long, checksum long",
-    )
+    return row_map(df, stats, "media_id long, width int, height int, sum_pixels long, checksum long")
 
 
 def gif_frame_stats(df: DataFrame) -> DataFrame:
@@ -268,47 +205,19 @@ def gif_frame_stats(df: DataFrame) -> DataFrame:
     ``gif_pixel_stats`` — the GIF sibling of mm07's MJPEG-AVI frame
     sampling. Malformed payloads contribute zero rows (tolerant
     reader); partition-preserving Arrow batches."""
-    repo_root = REPO_ROOT
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct  # noqa: PLC0415
-        import sys  # noqa: PLC0415
+    def frames(_mid, payload):
+        try:
+            decoded = codecs.gif_decode_frames(bytes(payload))
+        except (TypeError, ValueError, IndexError, struct.error):
+            return []
+        rows = []
+        for fi, f in enumerate(decoded):
+            total, checksum = _weighted_stats(f["pixels"])
+            rows.append({"frame_idx": fi, "delay_cs": f["delay_cs"], "sum_pixels": total, "checksum": checksum})
+        return rows
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        import numpy as np  # noqa: PLC0415
-
-        from pyp_etl_pipeline_spark.multimodal import codecs  # noqa: PLC0415
-
-        mod = 1_000_000_007
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    frames = codecs.gif_decode_frames(bytes(payload))
-                except (TypeError, ValueError, IndexError, struct.error):
-                    continue
-                for fi, f in enumerate(frames):
-                    flat = f["pixels"].astype(np.int64).reshape(-1)
-                    weights = np.arange(1, flat.size + 1, dtype=np.int64)
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "frame_idx": fi,
-                            "delay_cs": f["delay_cs"],
-                            "sum_pixels": int(flat.sum()),
-                            "checksum": int((weights * flat).sum() % mod),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "delay_cs", "sum_pixels", "checksum"],
-            )
-
-    return df.mapInPandas(
-        op,
-        schema="media_id long, frame_idx int, delay_cs int, sum_pixels long, checksum long",
-    )
+    return row_map(df, frames, "media_id long, frame_idx int, delay_cs int, sum_pixels long, checksum long")
 
 
 def extract_features(df: DataFrame) -> DataFrame:
@@ -319,43 +228,44 @@ def extract_features(df: DataFrame) -> DataFrame:
     or audio features; real decodes live in ``decode_features`` /
     ``gif_pixel_stats`` / ``sample_frames_decoded`` (mm02–mm14).
 
-    ``mapInPandas`` keeps partitioning; each batch is a pandas DataFrame so
-    the stats vectorize over the batch, not per row.
+    ``mapInPandas`` keeps partitioning; ``kind`` is carried from the
+    input row.
     """
-    # nested helper: a closure reference to a module-level function
-    # pickles as an import the executor worker may not be able to
-    # resolve (see REPO_ROOT note); nested functions pickle by value
-    def byte_stats(payload: bytes) -> tuple[float, float]:
-        if not payload:
-            return 0.0, 0.0
-        s = sum(payload)
-        return (s % 997) / 997.0, (len(payload) % 31) / 31.0
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib  # noqa: PLC0415
+    def stats(_mid, payload):
+        # a MISSING payload is not an EMPTY payload: NULL in -> NULL
+        # features out (md5('') for a null blob was a lie the null-
+        # injection sweep caught, r8)
+        if payload is None:
+            return [{}]
+        return [
+            {
+                "n_bytes": len(payload),
+                "checksum": hashlib.md5(payload).hexdigest(),
+                "byte_stat0": (sum(payload) % 997) / 997.0,
+                "byte_stat1": (len(payload) % 31) / 31.0,
+            }
+        ]
 
-        for pdf in batches:
-            payloads = pdf["payload"]
-            # a MISSING payload is not an EMPTY payload: NULL in -> NULL
-            # features out (md5('') for a null blob was a lie the null-
-            # injection sweep caught, r8)
-            feats = [byte_stats(p) if p is not None else (None, None) for p in payloads]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": pd.array(
-                        [len(p) if p is not None else None for p in payloads], dtype="Int64"
-                    ),
-                    "checksum": [
-                        hashlib.md5(p).hexdigest() if p is not None else None for p in payloads
-                    ],
-                    "byte_stat0": [f[0] for f in feats],
-                    "byte_stat1": [f[1] for f in feats],
-                }
-            )
+    return row_map(df, stats, FEATURE_SCHEMA)
 
-    return df.mapInPandas(op, schema=FEATURE_SCHEMA)
+
+def _lum(px: np.ndarray, bpp: int, x: int, y: int) -> int:
+    """Integer luminance of decoded PNG pixel (x, y): the gray value, or
+    (r + 2g + b) DIV 4 for RGB (the dhash_features convention)."""
+    if bpp == 1:
+        return int(px[y, x])
+    r, g, b = (int(px[y, x * 3 + c]) for c in range(3))
+    return (r + 2 * g + b) // 4
+
+
+def _png_pixels(payload):
+    """``codecs.png_decode_pixels`` of a payload, or None for a NULL,
+    non-PNG or malformed one (the stray-tolerant decode contract)."""
+    try:
+        return codecs.png_decode_pixels(bytes(payload) if payload is not None else b"")
+    except (ValueError, IndexError, struct.error, zlib.error):
+        return None
 
 
 def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
@@ -373,50 +283,17 @@ def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
 
     Output: (media_id, payload = resized grayscale PNG, width, height).
     """
-    repo_root = REPO_ROOT
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct  # noqa: PLC0415
-        import sys  # noqa: PLC0415
-        import zlib  # noqa: PLC0415
+    def resize(_mid, payload):
+        decoded = _png_pixels(payload)
+        if decoded is None:
+            return []
+        px, w, h, bpp = decoded
+        rows = [[_lum(px, bpp, x * w // width, y * h // height) for x in range(width)] for y in range(height)]
+        return [{"payload": codecs.png_encode_gray_pixels(rows), "width": width, "height": height}]
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal import codecs  # noqa: PLC0415
-
-        for pdf in batches:
-            out_rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                p = bytes(payload) if payload is not None else b""
-                try:
-                    px, w, h, bpp = codecs.png_decode_pixels(p)
-                except (ValueError, IndexError, struct.error, zlib.error):
-                    continue
-
-                def lum(x: int, y: int) -> int:
-                    if bpp == 1:
-                        return int(px[y, x])
-                    r, g, b = (int(px[y, x * 3 + c]) for c in range(3))
-                    return (r + 2 * g + b) // 4
-
-                rows = [
-                    [lum(x * w // width, y * h // height) for x in range(width)]
-                    for y in range(height)
-                ]
-                out_rows.append(
-                    {
-                        "media_id": mid,
-                        "payload": codecs.png_encode_gray_pixels(rows),
-                        "width": width,
-                        "height": height,
-                    }
-                )
-            yield pd.DataFrame(
-                out_rows, columns=["media_id", "payload", "width", "height"]
-            )
-
-    return df.select("media_id", "payload").mapInPandas(
-        op, schema="media_id long, payload binary, width int, height int"
+    return row_map(
+        df.select("media_id", "payload"), resize, "media_id long, payload binary, width int, height int"
     )
 
 
@@ -428,56 +305,24 @@ def png_pixel_stats(df: DataFrame) -> DataFrame:
     pins every pixel VALUE at every POSITION. Luminance for multi-
     channel images follows the dhash convention. Map-only; corrupt
     payloads drop."""
-    repo_root = REPO_ROOT
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct  # noqa: PLC0415
-        import sys  # noqa: PLC0415
-        import zlib  # noqa: PLC0415
+    def stats(_mid, payload):
+        decoded = _png_pixels(payload)
+        if decoded is None:
+            return []
+        px, w, h, bpp = decoded
+        total = checksum = 0
+        for y in range(h):
+            for x in range(w):
+                v = _lum(px, bpp, x, y)
+                total += v
+                checksum += v * (y * w + x + 1)
+        return [{"width": w, "height": h, "n_px": w * h, "pix_sum": total, "pix_checksum": checksum}]
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal import codecs  # noqa: PLC0415
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                p = bytes(payload) if payload is not None else b""
-                try:
-                    px, w, h, bpp = codecs.png_decode_pixels(p)
-                except (ValueError, IndexError, struct.error, zlib.error):
-                    continue
-
-                def lum(x: int, y: int) -> int:
-                    if bpp == 1:
-                        return int(px[y, x])
-                    r, g, b = (int(px[y, x * 3 + c]) for c in range(3))
-                    return (r + 2 * g + b) // 4
-
-                total = checksum = 0
-                for y in range(h):
-                    for x in range(w):
-                        v = lum(x, y)
-                        total += v
-                        checksum += v * (y * w + x + 1)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": w,
-                        "height": h,
-                        "n_px": w * h,
-                        "pix_sum": total,
-                        "pix_checksum": checksum,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "n_px", "pix_sum", "pix_checksum"],
-            )
-
-    return df.select("media_id", "payload").mapInPandas(
-        op,
-        schema="media_id long, width int, height int, n_px long, pix_sum long, pix_checksum long",
+    return row_map(
+        df.select("media_id", "payload"),
+        stats,
+        "media_id long, width int, height int, n_px long, pix_sum long, pix_checksum long",
     )
 
 
@@ -542,94 +387,66 @@ def sample_frames_decoded(df: DataFrame, every_ms: int = 1000, decoder=None) -> 
     (dependency injection — registry state does not travel driver ->
     worker). When None, workers consult their own plugin registry, which
     a cluster image arms via ``PYP_VIDEO_PLUGIN`` (see plugins.py)."""
-    repo_root = REPO_ROOT
-    injected = decoder
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct  # noqa: PLC0415
-        import sys  # noqa: PLC0415
-        import zlib  # noqa: PLC0415
+    def sample(_mid, payload):
+        p = bytes(payload) if payload is not None else b""
+        fmt = codecs.sniff_kind(p)
+        rows = []
+        if fmt != "avi":
+            # inter-frame containers (mp4/mkv/webm) decode only
+            # through a registered or injected backend
+            # (plugins.py seam) — without one they are skipped,
+            # stray-tolerant
+            if decoder is not None and fmt in getattr(decoder, "container_formats", ()):
+                dec = decoder
+            else:
+                dec = plugins.get_video_decoder(fmt) if fmt else None
+            if dec is None:
+                return rows
+            try:
+                frames = list(dec.decode_frames(p))
+            except Exception:  # noqa: BLE001 — stray payload
+                return rows
+            if not frames:
+                return rows
+            duration_ms = frames[-1][1]
+            for k in range(max(1, int(duration_ms // every_ms))):
+                ts = k * every_ms
+                idx = max((i for i, (_, pts, _f) in enumerate(frames) if pts <= ts), default=0)
+                fr = frames[idx][2]
+                rows.append(
+                    {
+                        "frame_idx": int(frames[idx][0]),
+                        "frame_ts_ms": int(ts),
+                        "width": int(fr.shape[1]),
+                        "height": int(fr.shape[0]),
+                        "mean_val": float(fr.mean()),
+                    }
+                )
+            return rows
+        try:
+            meta = codecs.avi_mjpeg_decode(p)
+            frames = meta["frames"]
+            if not frames:
+                return rows
+            for k in range(max(1, int(meta["duration_ms"] // every_ms))):
+                ts = k * every_ms
+                idx = min(len(frames) - 1, ts * meta["fps_num"] // (1000 * meta["fps_den"]))
+                d = codecs.jpeg_decode(frames[idx])
+                rows.append(
+                    {
+                        "frame_idx": int(idx),
+                        "frame_ts_ms": int(ts),
+                        "width": d["width"],
+                        "height": d["height"],
+                        "mean_val": d["mean_val"],
+                    }
+                )
+        except (ValueError, IndexError, KeyError, EOFError, struct.error, zlib.error):
+            pass
+        return rows
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal import codecs  # noqa: PLC0415
-
-        from pyp_etl_pipeline_spark.multimodal import plugins  # noqa: PLC0415
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                p = bytes(payload) if payload is not None else b""
-                fmt = codecs.sniff_kind(p)
-                if fmt != "avi":
-                    # inter-frame containers (mp4/mkv/webm) decode only
-                    # through a registered or injected backend
-                    # (plugins.py seam) — without one they are skipped,
-                    # stray-tolerant
-                    if injected is not None and fmt in getattr(
-                        injected, "container_formats", ()
-                    ):
-                        dec = injected
-                    else:
-                        dec = plugins.get_video_decoder(fmt) if fmt else None
-                    if dec is not None:
-                        try:
-                            frames = list(dec.decode_frames(p))
-                        except Exception:  # noqa: BLE001 — stray payload
-                            continue
-                        if not frames:
-                            continue
-                        duration_ms = frames[-1][1]
-                        n_samples = max(1, int(duration_ms // every_ms))
-                        for k in range(n_samples):
-                            ts = k * every_ms
-                            idx = max(
-                                (i for i, (_, pts, _f) in enumerate(frames) if pts <= ts),
-                                default=0,
-                            )
-                            _, _, fr = frames[idx]
-                            rows.append(
-                                {
-                                    "media_id": mid,
-                                    "frame_idx": int(frames[idx][0]),
-                                    "frame_ts_ms": int(ts),
-                                    "width": int(fr.shape[1]),
-                                    "height": int(fr.shape[0]),
-                                    "mean_val": float(fr.mean()),
-                                }
-                            )
-                    continue
-                try:
-                    meta = codecs.avi_mjpeg_decode(p)
-                    frames = meta["frames"]
-                    if not frames:
-                        continue
-                    n_samples = max(1, int(meta["duration_ms"] // every_ms))
-                    for k in range(n_samples):
-                        ts = k * every_ms
-                        idx = min(
-                            len(frames) - 1,
-                            ts * meta["fps_num"] // (1000 * meta["fps_den"]),
-                        )
-                        d = codecs.jpeg_decode(frames[idx])
-                        rows.append(
-                            {
-                                "media_id": mid,
-                                "frame_idx": int(idx),
-                                "frame_ts_ms": int(ts),
-                                "width": d["width"],
-                                "height": d["height"],
-                                "mean_val": d["mean_val"],
-                            }
-                        )
-                except (ValueError, IndexError, KeyError, EOFError, struct.error, zlib.error):
-                    continue
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "frame_ts_ms", "width", "height", "mean_val"],
-            )
-
-    return df.filter(F.col("kind") == "video").mapInPandas(op, SAMPLED_FRAME_SCHEMA)
+    return row_map(df.filter(F.col("kind") == "video"), sample, SAMPLED_FRAME_SCHEMA)
 
 
 def hadamard_spectrum(
@@ -649,51 +466,27 @@ def hadamard_spectrum(
     n_fft^2 integer ops (n_fft is a constant) — embarrassingly parallel
     over a 100 TB media corpus. Clips shorter than ``n_fft`` zero-pad
     (energy then concentrates in low bands, as expected)."""
-    repo_root = REPO_ROOT
     band_w = n_fft // n_bands
+    # rows of the order-n_fft Hadamard matrix: H[f, j] = (-1)^popcount(f & j)
+    popc = np.array(
+        [[bin(f & j).count("1") & 1 for j in range(n_fft)] for f in range(n_fft)],
+        dtype=np.int64,
+    )
+    hmat = 1 - 2 * popc  # +1 / -1
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct  # noqa: PLC0415
-        import sys  # noqa: PLC0415
+    def spectrum(_mid, payload):
+        try:
+            samples, _, _ = codecs.wav_pcm_samples(bytes(payload) if payload is not None else b"")
+        except (ValueError, IndexError, struct.error):
+            return []  # non-WAV strays drop out (null-free long format)
+        x = np.zeros(n_fft, dtype=np.int64)
+        take = min(n_fft, samples.size)
+        x[:take] = samples[:take].astype(np.int64)
+        coeff = hmat @ x  # exact int64 WHT
+        energy = coeff * coeff
+        return [{"band": b, "energy": int(energy[b * band_w : (b + 1) * band_w].sum())} for b in range(n_bands)]
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        import numpy as np  # noqa: PLC0415
-
-        from pyp_etl_pipeline_spark.multimodal import codecs  # noqa: PLC0415
-
-        # rows of the order-n_fft Hadamard matrix: H[f, j] = (-1)^popcount(f & j)
-        f_idx = np.arange(n_fft, dtype=np.int64)
-        popc = np.array(
-            [[bin(f & j).count("1") & 1 for j in range(n_fft)] for f in f_idx],
-            dtype=np.int64,
-        )
-        hmat = 1 - 2 * popc  # +1 / -1
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                p = bytes(payload) if payload is not None else b""
-                try:
-                    samples, _, _ = codecs.wav_pcm_samples(p)
-                except (ValueError, IndexError, struct.error):
-                    continue  # non-WAV strays drop out (null-free long format)
-                x = np.zeros(n_fft, dtype=np.int64)
-                take = min(n_fft, samples.size)
-                x[:take] = samples[:take].astype(np.int64)
-                coeff = hmat @ x  # exact int64 WHT
-                energy = coeff * coeff
-                for b in range(n_bands):
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "band": b,
-                            "energy": int(energy[b * band_w : (b + 1) * band_w].sum()),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=["media_id", "band", "energy"])
-
-    return df.mapInPandas(op, schema="media_id long, band int, energy long")
+    return row_map(df, spectrum, "media_id long, band int, energy long")
 
 
 def dhash_features(df: DataFrame, grid: int = 8) -> DataFrame:
@@ -707,61 +500,29 @@ def dhash_features(df: DataFrame, grid: int = 8) -> DataFrame:
     analog of SimHash text dedup. Hash ships as two 32-bit halves
     (lo = rows 0..grid/2-1) so no engine touches the signed bit-63
     shift edge. Map-only Arrow batches; non-PNG strays drop out."""
-    repo_root = REPO_ROOT
+    half = grid // 2
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct  # noqa: PLC0415
-        import sys  # noqa: PLC0415
-        import zlib  # noqa: PLC0415
+    def dhash(_mid, payload):
+        decoded = _png_pixels(payload)
+        if decoded is None:
+            return []
+        px, w, h, bpp = decoded
+        sx = [x * w // (grid + 1) for x in range(grid + 1)]
+        sy = [y * h // grid for y in range(grid)]
+        lo = hi = 0
+        n_bits = 0
+        for yi in range(grid):
+            for x in range(grid):
+                bit = 1 if _lum(px, bpp, sx[x + 1], sy[yi]) > _lum(px, bpp, sx[x], sy[yi]) else 0
+                n_bits += bit
+                if yi < half:
+                    lo |= bit << (yi * grid + x)
+                else:
+                    hi |= bit << ((yi - half) * grid + x)
+        return [{"width": w, "height": h, "dhash_lo": lo, "dhash_hi": hi, "n_gradient_bits": n_bits}]
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal import codecs  # noqa: PLC0415
-
-        half = grid // 2
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                p = bytes(payload) if payload is not None else b""
-                try:
-                    px, w, h, bpp = codecs.png_decode_pixels(p)
-                except (ValueError, IndexError, struct.error, zlib.error):
-                    continue
-
-                def lum(x: int, y: int) -> int:
-                    if bpp == 1:
-                        return int(px[y, x])
-                    r, g, b = (int(px[y, x * 3 + c]) for c in range(3))
-                    return (r + 2 * g + b) // 4
-
-                sx = [x * w // (grid + 1) for x in range(grid + 1)]
-                sy = [y * h // grid for y in range(grid)]
-                lo = hi = 0
-                n_bits = 0
-                for yi in range(grid):
-                    for x in range(grid):
-                        bit = 1 if lum(sx[x + 1], sy[yi]) > lum(sx[x], sy[yi]) else 0
-                        n_bits += bit
-                        if yi < half:
-                            lo |= bit << (yi * grid + x)
-                        else:
-                            hi |= bit << ((yi - half) * grid + x)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": w,
-                        "height": h,
-                        "dhash_lo": lo,
-                        "dhash_hi": hi,
-                        "n_gradient_bits": n_bits,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "dhash_lo", "dhash_hi", "n_gradient_bits"],
-            )
-
-    return df.mapInPandas(
-        op,
-        schema="media_id long, width int, height int, dhash_lo long, dhash_hi long, n_gradient_bits int",
+    return row_map(
+        df,
+        dhash,
+        "media_id long, width int, height int, dhash_lo long, dhash_hi long, n_gradient_bits int",
     )

@@ -672,6 +672,52 @@ def mp4_decode(payload: bytes) -> dict:
     return out
 
 
+_SAMPLE_TABLE_PATH = (b"trak", b"mdia", b"minf", b"stbl")
+
+
+def find_sample_entry_record(payload: bytes, entry_tags: tuple[bytes, ...], rec_tag: bytes) -> bytes:
+    """Walk moov/trak/mdia/minf/stbl/stsd/<entry>/ to the first
+    ``rec_tag`` box (a codec configuration record such as avcC, hvcC,
+    av1C or vpcC) under a sample entry whose tag is in ``entry_tags``,
+    and return its body. Raises ValueError when there is no moov box, no
+    such record, or a box on the walk is malformed."""
+    moov = None
+    for tag, body, boxend in _iter_boxes(payload, 0, len(payload)):
+        if tag == b"moov":
+            moov = (body, boxend)
+    if moov is None:
+        raise ValueError("no moov box")
+
+    def walk(start: int, end: int) -> bytes | None:
+        rec = None
+        for tag, body, boxend in _iter_boxes(payload, start, end):
+            if rec is not None:
+                break
+            if tag == rec_tag:
+                rec = payload[body:boxend]
+            elif tag in _SAMPLE_TABLE_PATH:
+                rec = walk(body, boxend)
+            elif tag == b"stsd":
+                # FullBox header (4) + entry_count (4), then sample entries
+                rec = walk(body + 8, boxend)
+            elif tag in entry_tags:
+                # VisualSampleEntry fixed fields are 78 bytes; boxes follow
+                rec = walk(body + 78, boxend)
+        return rec
+
+    rec = walk(*moov)
+    if rec is None:
+        raise ValueError(f"no {rec_tag.decode()} record in any sample entry")
+    return rec
+
+
+def with_dims_match(r: dict) -> dict:
+    """A container-extract row plus its ``dims_match`` QA flag: the tkhd
+    display dims equal the stream's coded-minus-crop dims."""
+    match = r["container_width"] == r["width"] and r["container_height"] == r["height"]
+    return {**r, "dims_match": match}
+
+
 # ------------------------------------------------------- AVI (MJPEG video)
 
 def _riff_chunk(tag: bytes, body: bytes) -> bytes:

@@ -24,9 +24,14 @@ bitstreams rather than a private fixture format.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
+
+from pyp_etl_pipeline_spark.multimodal.codecs import (
+    find_sample_entry_record,
+    mp4_decode,
+    with_dims_match,
+)
+from pyp_etl_pipeline_spark.multimodal.rowmap import row_map
 
 
 class _BitWriter:
@@ -284,9 +289,6 @@ def sps_parse(payload: bytes) -> dict:
     }
 
 
-_SPS_NULL = {"profile_idc": None, "level_idc": None, "width": None, "height": None, "fps": None}
-
-
 def sps_features(df: DataFrame, permissive: bool = False) -> DataFrame:
     """DataFrame operator: (media_id long, payload binary) -> parsed SPS
     metadata. Arrow-batched ``mapInPandas`` like every codec here —
@@ -298,47 +300,12 @@ def sps_features(df: DataFrame, permissive: bool = False) -> DataFrame:
     or truncated payload yields NULL fields plus an ``error`` column
     instead of failing the whole stage — one bad blob in a billion must
     not kill the job."""
-    import os  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
-
-    repo_root = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", ".."))
-
-    def op(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.h264 import _SPS_NULL, sps_parse  # noqa: PLC0415
-
-        for pdf in batches:
-            rows, errs = [], []
-            for p in pdf["payload"]:
-                if permissive:
-                    try:
-                        rows.append(sps_parse(bytes(p)))
-                        errs.append(None)
-                    except Exception as exc:  # noqa: BLE001 — per-row quarantine
-                        rows.append(dict(_SPS_NULL))
-                        errs.append(f"{type(exc).__name__}: {exc}")
-                else:
-                    rows.append(sps_parse(bytes(p)))
-            out = {
-                "media_id": pdf["media_id"],
-                "profile_idc": [r["profile_idc"] for r in rows],
-                "level_idc": [r["level_idc"] for r in rows],
-                "width": [r["width"] for r in rows],
-                "height": [r["height"] for r in rows],
-                "fps": [r["fps"] for r in rows],
-            }
-            if permissive:
-                out["error"] = errs
-            yield pd.DataFrame(out)
-
-    schema = "media_id long, profile_idc int, level_idc int, width int, height int, fps double"
-    if permissive:
-        schema += ", error string"
-    return df.mapInPandas(op, schema)
+    return row_map(
+        df,
+        lambda _mid, p: [sps_parse(bytes(p))],
+        "media_id long, profile_idc int, level_idc int, width int, height int, fps double",
+        permissive,
+    )
 
 
 # ---------------------------------------------------- avcC-in-MP4 (mm16)
@@ -516,40 +483,8 @@ def mp4_avcc_extract(payload: bytes) -> dict:
     """Walk a real MP4's box tree to the avcC record, bit-parse its SPS,
     and return stream metadata alongside the container's tkhd display
     dims (``container_width/height``) for cross-validation."""
-    from pyp_etl_pipeline_spark.multimodal.codecs import (  # noqa: PLC0415
-        _iter_boxes,
-        mp4_decode,
-    )
-
     meta = mp4_decode(payload)  # brand/duration/tkhd dims from real bytes
-    rec = None
-    moov = None
-    for tag, body, boxend in _iter_boxes(payload, 0, len(payload)):
-        if tag == b"moov":
-            moov = (body, boxend)
-    if moov is None:
-        raise ValueError("no moov box")
-
-    def walk(span, path):
-        nonlocal rec
-        for tag, body, boxend in _iter_boxes(payload, *span):
-            if rec is not None:
-                return
-            if tag == b"avcC":
-                rec = payload[body:boxend]
-            elif tag in (b"trak", b"mdia", b"minf", b"stbl"):
-                walk((body, boxend), path + [tag])
-            elif tag == b"stsd":
-                # FullBox header (4) + entry_count (4), then sample entries
-                walk((body + 8, boxend), path + [tag])
-            elif tag == b"avc1":
-                # VisualSampleEntry fixed fields are 78 bytes; boxes follow
-                walk((body + 78, boxend), path + [tag])
-
-    walk(moov, [])
-    if rec is None:
-        raise ValueError("no avcC record in any sample entry")
-    sps = avcc_parse(rec)
+    sps = avcc_parse(find_sample_entry_record(payload, (b"avc1",), b"avcC"))
     return {
         "container_width": meta["width"],
         "container_height": meta["height"],
@@ -558,70 +493,15 @@ def mp4_avcc_extract(payload: bytes) -> dict:
     }
 
 
-_AVC_NULL = {
-    "container_width": None, "container_height": None, "duration_ms": None,
-    "profile_idc": None, "level_idc": None, "width": None, "height": None, "fps": None,
-}
-
-
 def avc_container_features(df: DataFrame, permissive: bool = False) -> DataFrame:
     """DataFrame operator: (media_id long, payload binary MP4) ->
     container + stream metadata with a dims_match QA flag. Arrow-batched
     ``mapInPandas``, map-only — same 100 TB shape as ``sps_features``,
     including its ``permissive`` corpus-scale quarantine mode."""
-    import os  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
-
-    repo_root = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", ".."))
-
-    def op(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.h264 import _AVC_NULL, mp4_avcc_extract  # noqa: PLC0415
-
-        for pdf in batches:
-            rows, errs = [], []
-            for p in pdf["payload"]:
-                if permissive:
-                    try:
-                        rows.append(mp4_avcc_extract(bytes(p)))
-                        errs.append(None)
-                    except Exception as exc:  # noqa: BLE001 — per-row quarantine
-                        rows.append(dict(_AVC_NULL))
-                        errs.append(f"{type(exc).__name__}: {exc}")
-                else:
-                    rows.append(mp4_avcc_extract(bytes(p)))
-            out = {
-                "media_id": pdf["media_id"],
-                "container_width": [r["container_width"] for r in rows],
-                "container_height": [r["container_height"] for r in rows],
-                "duration_ms": [r["duration_ms"] for r in rows],
-                "profile_idc": [r["profile_idc"] for r in rows],
-                "level_idc": [r["level_idc"] for r in rows],
-                "width": [r["width"] for r in rows],
-                "height": [r["height"] for r in rows],
-                "fps": [r["fps"] for r in rows],
-                "dims_match": [
-                    None
-                    if r["width"] is None
-                    else (
-                        r["container_width"] == r["width"]
-                        and r["container_height"] == r["height"]
-                    )
-                    for r in rows
-                ],
-            }
-            if permissive:
-                out["error"] = errs
-            yield pd.DataFrame(out)
-
-    schema = (
+    return row_map(
+        df,
+        lambda _mid, p: [with_dims_match(mp4_avcc_extract(bytes(p)))],
         "media_id long, container_width int, container_height int, duration_ms double, "
-        "profile_idc int, level_idc int, width int, height int, fps double, dims_match boolean"
+        "profile_idc int, level_idc int, width int, height int, fps double, dims_match boolean",
+        permissive,
     )
-    if permissive:
-        schema += ", error string"
-    return df.mapInPandas(op, schema)

@@ -32,16 +32,20 @@ SPS = type 33.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 
+from pyp_etl_pipeline_spark.multimodal.codecs import (
+    find_sample_entry_record,
+    mp4_decode,
+    with_dims_match,
+)
 from pyp_etl_pipeline_spark.multimodal.h264 import (
     _BitReader,
     _BitWriter,
     _emulation_prevent,
     _emulation_strip,
 )
+from pyp_etl_pipeline_spark.multimodal.rowmap import row_map
 
 # (SubWidthC, SubHeightC) by chroma_format_idc; conformance-window offsets
 # are in these units (monochrome and 4:4:4 crop in luma units)
@@ -313,64 +317,18 @@ def hevc_sps_parse(payload: bytes) -> dict:
     }
 
 
-_HEVC_NULL = {
-    "profile_idc": None, "tier": None, "level_idc": None, "width": None,
-    "height": None, "bit_depth": None, "chroma_format_idc": None, "fps": None,
-}
-
-
 def hevc_sps_features(df: DataFrame, permissive: bool = False) -> DataFrame:
     """DataFrame operator: (media_id long, payload binary) -> parsed HEVC
     SPS metadata. Arrow-batched ``mapInPandas``, map-only — the same
     100 TB shape and ``permissive`` corpus-scale quarantine contract as
     ``h264.sps_features``."""
-    import os  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
-
-    repo_root = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", ".."))
-
-    def op(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.h265 import _HEVC_NULL, hevc_sps_parse  # noqa: PLC0415
-
-        for pdf in batches:
-            rows, errs = [], []
-            for p in pdf["payload"]:
-                if permissive:
-                    try:
-                        rows.append(hevc_sps_parse(bytes(p)))
-                        errs.append(None)
-                    except Exception as exc:  # noqa: BLE001 — per-row quarantine
-                        rows.append(dict(_HEVC_NULL))
-                        errs.append(f"{type(exc).__name__}: {exc}")
-                else:
-                    rows.append(hevc_sps_parse(bytes(p)))
-            out = {
-                "media_id": pdf["media_id"],
-                "profile_idc": [r["profile_idc"] for r in rows],
-                "tier": [r["tier"] for r in rows],
-                "level_idc": [r["level_idc"] for r in rows],
-                "width": [r["width"] for r in rows],
-                "height": [r["height"] for r in rows],
-                "bit_depth": [r["bit_depth"] for r in rows],
-                "chroma_format_idc": [r["chroma_format_idc"] for r in rows],
-                "fps": [r["fps"] for r in rows],
-            }
-            if permissive:
-                out["error"] = errs
-            yield pd.DataFrame(out)
-
-    schema = (
+    return row_map(
+        df,
+        lambda _mid, p: [hevc_sps_parse(bytes(p))],
         "media_id long, profile_idc int, tier int, level_idc int, width int, "
-        "height int, bit_depth int, chroma_format_idc int, fps double"
+        "height int, bit_depth int, chroma_format_idc int, fps double",
+        permissive,
     )
-    if permissive:
-        schema += ", error string"
-    return df.mapInPandas(op, schema)
 
 
 # --------------------------------------------------- hvcC-in-MP4 (mm18)
@@ -535,39 +493,8 @@ def mp4_hvcc_extract(payload: bytes) -> dict:
     """Walk a real MP4's box tree to the hvcC record, bit-parse its SPS,
     and return stream metadata alongside the container's tkhd display
     dims for cross-validation."""
-    from pyp_etl_pipeline_spark.multimodal.codecs import (  # noqa: PLC0415
-        _iter_boxes,
-        mp4_decode,
-    )
-
     meta = mp4_decode(payload)
-    rec = None
-    moov = None
-    for tag, body, boxend in _iter_boxes(payload, 0, len(payload)):
-        if tag == b"moov":
-            moov = (body, boxend)
-    if moov is None:
-        raise ValueError("no moov box")
-
-    def walk(span):
-        nonlocal rec
-        for tag, body, boxend in _iter_boxes(payload, *span):
-            if rec is not None:
-                return
-            if tag == b"hvcC":
-                rec = payload[body:boxend]
-            elif tag in (b"trak", b"mdia", b"minf", b"stbl"):
-                walk((body, boxend))
-            elif tag == b"stsd":
-                walk((body + 8, boxend))
-            elif tag in (b"hvc1", b"hev1"):
-                # VisualSampleEntry fixed fields are 78 bytes
-                walk((body + 78, boxend))
-
-    walk(moov)
-    if rec is None:
-        raise ValueError("no hvcC record in any sample entry")
-    sps = hvcc_parse(rec)
+    sps = hvcc_parse(find_sample_entry_record(payload, (b"hvc1", b"hev1"), b"hvcC"))
     return {
         "container_width": meta["width"],
         "container_height": meta["height"],
@@ -576,74 +503,16 @@ def mp4_hvcc_extract(payload: bytes) -> dict:
     }
 
 
-_HVC_NULL = {
-    "container_width": None, "container_height": None, "duration_ms": None,
-    "profile_idc": None, "tier": None, "level_idc": None, "width": None,
-    "height": None, "bit_depth": None, "chroma_format_idc": None, "fps": None,
-}
-
-
 def hevc_container_features(df: DataFrame, permissive: bool = False) -> DataFrame:
     """DataFrame operator: (media_id long, payload binary MP4) ->
     container + HEVC stream metadata with a dims_match QA flag —
     the HEVC mirror of ``h264.avc_container_features``, including the
     ``permissive`` corpus-scale quarantine mode."""
-    import os  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
-
-    repo_root = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", ".."))
-
-    def op(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.h265 import _HVC_NULL, mp4_hvcc_extract  # noqa: PLC0415
-
-        for pdf in batches:
-            rows, errs = [], []
-            for p in pdf["payload"]:
-                if permissive:
-                    try:
-                        rows.append(mp4_hvcc_extract(bytes(p)))
-                        errs.append(None)
-                    except Exception as exc:  # noqa: BLE001 — per-row quarantine
-                        rows.append(dict(_HVC_NULL))
-                        errs.append(f"{type(exc).__name__}: {exc}")
-                else:
-                    rows.append(mp4_hvcc_extract(bytes(p)))
-            out = {
-                "media_id": pdf["media_id"],
-                "container_width": [r["container_width"] for r in rows],
-                "container_height": [r["container_height"] for r in rows],
-                "duration_ms": [r["duration_ms"] for r in rows],
-                "profile_idc": [r["profile_idc"] for r in rows],
-                "tier": [r["tier"] for r in rows],
-                "level_idc": [r["level_idc"] for r in rows],
-                "width": [r["width"] for r in rows],
-                "height": [r["height"] for r in rows],
-                "bit_depth": [r["bit_depth"] for r in rows],
-                "fps": [r["fps"] for r in rows],
-                "dims_match": [
-                    None
-                    if r["width"] is None
-                    else (
-                        r["container_width"] == r["width"]
-                        and r["container_height"] == r["height"]
-                    )
-                    for r in rows
-                ],
-            }
-            if permissive:
-                out["error"] = errs
-            yield pd.DataFrame(out)
-
-    schema = (
+    return row_map(
+        df,
+        lambda _mid, p: [with_dims_match(mp4_hvcc_extract(bytes(p)))],
         "media_id long, container_width int, container_height int, duration_ms double, "
         "profile_idc int, tier int, level_idc int, width int, height int, "
-        "bit_depth int, fps double, dims_match boolean"
+        "bit_depth int, fps double, dims_match boolean",
+        permissive,
     )
-    if permissive:
-        schema += ", error string"
-    return df.mapInPandas(op, schema)

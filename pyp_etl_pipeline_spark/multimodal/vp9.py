@@ -42,11 +42,16 @@ here, pin it the way test_h264's x264 golden is pinned.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 
+from pyp_etl_pipeline_spark.multimodal.codecs import (
+    _iter_boxes,
+    find_sample_entry_record,
+    mp4_decode,
+    with_dims_match,
+)
 from pyp_etl_pipeline_spark.multimodal.h264 import _BitReader, _BitWriter
+from pyp_etl_pipeline_spark.multimodal.rowmap import row_map
 
 VP9_SYNC_CODE = 0x498342
 CS_RGB = 7
@@ -209,61 +214,19 @@ def vp9_frame_header_parse(payload: bytes) -> dict:
     }
 
 
-_VP9_NULL = {
-    "profile": None, "bit_depth": None, "color_space": None, "color_range": None,
-    "chroma_sub_x": None, "chroma_sub_y": None, "width": None, "height": None,
-    "render_width": None, "render_height": None, "show_frame": None,
-}
-
-
 def vp9_frame_features(df: DataFrame, permissive: bool = False) -> DataFrame:
     """DataFrame operator: (media_id long, payload binary) -> parsed VP9
     keyframe-header metadata. Arrow-batched ``mapInPandas``, map-only —
     same 100 TB shape and ``permissive`` quarantine contract as the
     H.264/HEVC/AV1 feature operators."""
-    import os  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
-
-    repo_root = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", ".."))
-
-    def op(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.vp9 import (  # noqa: PLC0415
-            _VP9_NULL,
-            vp9_frame_header_parse,
-        )
-
-        for pdf in batches:
-            rows, errs = [], []
-            for p in pdf["payload"]:
-                if permissive:
-                    try:
-                        rows.append(vp9_frame_header_parse(bytes(p)))
-                        errs.append(None)
-                    except Exception as exc:  # noqa: BLE001 — per-row quarantine
-                        rows.append(dict(_VP9_NULL))
-                        errs.append(f"{type(exc).__name__}: {exc}")
-                else:
-                    rows.append(vp9_frame_header_parse(bytes(p)))
-            out = {"media_id": pdf["media_id"]}
-            for k in _VP9_NULL:
-                out[k] = [r[k] for r in rows]
-            if permissive:
-                out["error"] = errs
-            yield pd.DataFrame(out)
-
-    schema = (
+    return row_map(
+        df,
+        lambda _mid, p: [vp9_frame_header_parse(bytes(p))],
         "media_id long, profile int, bit_depth int, color_space int, "
         "color_range int, chroma_sub_x int, chroma_sub_y int, width int, "
-        "height int, render_width int, render_height int, show_frame int"
+        "height int, render_width int, render_height int, show_frame int",
+        permissive,
     )
-    if permissive:
-        schema += ", error string"
-    return df.mapInPandas(op, schema)
 
 
 # --------------------------------------------------- vpcC-in-MP4 (mm22)
@@ -430,40 +393,9 @@ def mp4_vpcc_extract(payload: bytes) -> dict:
     display dims vs the coded dims — the VP9 shape of the
     container-vs-stream QA the other three codec tiers do, adapted to
     VP9's in-frame config carriage."""
-    from pyp_etl_pipeline_spark.multimodal.codecs import (  # noqa: PLC0415
-        _iter_boxes,
-        mp4_decode,
-    )
-
     meta = mp4_decode(payload)
-    rec = None
-    moov = mdat = None
-    for tag, body, boxend in _iter_boxes(payload, 0, len(payload)):
-        if tag == b"moov":
-            moov = (body, boxend)
-        elif tag == b"mdat" and mdat is None:
-            mdat = (body, boxend)
-    if moov is None:
-        raise ValueError("no moov box")
-
-    def walk(span):
-        nonlocal rec
-        for tag, body, boxend in _iter_boxes(payload, *span):
-            if rec is not None:
-                return
-            if tag == b"vpcC":
-                rec = payload[body:boxend]
-            elif tag in (b"trak", b"mdia", b"minf", b"stbl"):
-                walk((body, boxend))
-            elif tag == b"stsd":
-                walk((body + 8, boxend))
-            elif tag == b"vp09":
-                walk((body + 78, boxend))
-
-    walk(moov)
-    if rec is None:
-        raise ValueError("no vpcC record in any sample entry")
-    out = vpcc_parse(rec)
+    out = vpcc_parse(find_sample_entry_record(payload, (b"vp09",), b"vpcC"))
+    mdat = next((span for tag, *span in _iter_boxes(payload, 0, len(payload)) if tag == b"mdat"), None)
     if mdat is None or mdat[0] == mdat[1]:
         raise ValueError("no VP9 frame in mdat (vpcC carries no init data)")
     stream = vp9_frame_header_parse(payload[mdat[0] : mdat[1]])
@@ -483,77 +415,16 @@ def mp4_vpcc_extract(payload: bytes) -> dict:
     }
 
 
-_VPCC_NULL = {
-    "container_width": None, "container_height": None, "duration_ms": None,
-    "profile": None, "record_level": None, "bit_depth": None,
-    "chroma_sub_x": None, "chroma_sub_y": None, "color_range": None,
-    "width": None, "height": None, "record_matches": None,
-}
-
-
 def vp9_container_features(df: DataFrame, permissive: bool = False) -> DataFrame:
     """DataFrame operator: (media_id long, payload binary MP4) ->
     container + VP9 stream metadata with dims_match and record_matches
     QA flags — the VP9 mirror of the avc/hevc/av1 container operators."""
-    import os  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
-
-    repo_root = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", ".."))
-
-    def op(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from pyp_etl_pipeline_spark.multimodal.vp9 import _VPCC_NULL, mp4_vpcc_extract  # noqa: PLC0415
-
-        for pdf in batches:
-            rows, errs = [], []
-            for p in pdf["payload"]:
-                if permissive:
-                    try:
-                        rows.append(mp4_vpcc_extract(bytes(p)))
-                        errs.append(None)
-                    except Exception as exc:  # noqa: BLE001 — per-row quarantine
-                        rows.append(dict(_VPCC_NULL))
-                        errs.append(f"{type(exc).__name__}: {exc}")
-                else:
-                    rows.append(mp4_vpcc_extract(bytes(p)))
-            out = {
-                "media_id": pdf["media_id"],
-                "container_width": [r["container_width"] for r in rows],
-                "container_height": [r["container_height"] for r in rows],
-                "duration_ms": [r["duration_ms"] for r in rows],
-                "profile": [r["profile"] for r in rows],
-                "record_level": [r["record_level"] for r in rows],
-                "bit_depth": [r["bit_depth"] for r in rows],
-                "chroma_sub_x": [r["chroma_sub_x"] for r in rows],
-                "chroma_sub_y": [r["chroma_sub_y"] for r in rows],
-                "color_range": [r["color_range"] for r in rows],
-                "width": [r["width"] for r in rows],
-                "height": [r["height"] for r in rows],
-                "record_matches": [r["record_matches"] for r in rows],
-                "dims_match": [
-                    None
-                    if r["width"] is None
-                    else (
-                        r["container_width"] == r["width"]
-                        and r["container_height"] == r["height"]
-                    )
-                    for r in rows
-                ],
-            }
-            if permissive:
-                out["error"] = errs
-            yield pd.DataFrame(out)
-
-    schema = (
+    return row_map(
+        df,
+        lambda _mid, p: [with_dims_match(mp4_vpcc_extract(bytes(p)))],
         "media_id long, container_width int, container_height int, duration_ms double, "
         "profile int, record_level int, bit_depth int, chroma_sub_x int, "
         "chroma_sub_y int, color_range int, width int, height int, "
-        "record_matches boolean, dims_match boolean"
+        "record_matches boolean, dims_match boolean",
+        permissive,
     )
-    if permissive:
-        schema += ", error string"
-    return df.mapInPandas(op, schema)

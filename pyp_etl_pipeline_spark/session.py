@@ -4,13 +4,41 @@ Local-mode defaults match the test/bench harness (local[N], AQE on,
 UTC session timezone so timestamp semantics line up with the DuckDB
 oracle). On a real cluster the same builder works — only master and
 memory knobs change.
+
+Workers import the package because the session ships it: every session
+this factory returns has the package zip added (``ship_package``), so
+pandas-UDF / ``mapInPandas`` functions import ``pyp_etl_pipeline_spark``
+on Python workers whatever the launching cwd, and module-level functions
+pickle by reference.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_PKG_ZIP: str | None = None
+
+
+def ship_package(spark: SparkSession) -> None:
+    """Add a zip of ``pyp_etl_pipeline_spark`` to the SparkContext's Python
+    files, once per context. The zip is built lazily, once per process."""
+    global _PKG_ZIP
+    sc = spark.sparkContext
+    if getattr(sc, "_pyp_pkg_added", False):
+        return
+    if _PKG_ZIP is None or not os.path.exists(_PKG_ZIP):
+        base = os.path.join(tempfile.gettempdir(), f"pyp_etl_pipeline_spark_pkg_{os.getpid()}")
+        _PKG_ZIP = shutil.make_archive(base, "zip", root_dir=_REPO, base_dir="pyp_etl_pipeline_spark")
+    try:
+        sc.addPyFile(_PKG_ZIP)
+    except Exception:  # noqa: BLE001 — already added / context quirk; imports may still work via cwd
+        pass
+    sc._pyp_pkg_added = True
 
 
 def get_spark(
@@ -60,4 +88,5 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    ship_package(spark)
     return spark

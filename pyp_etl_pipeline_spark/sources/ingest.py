@@ -233,9 +233,12 @@ def read_excel_distributed(
     reader. For many-file corpora, call this per file and union —
     tasks from different files parallelize perfectly.
     """
+    import pandas as pd  # noqa: PLC0415
+
     from pyp_etl_pipeline_spark.sources.xlsx import (  # noqa: PLC0415
         count_sheet_rows,
         extract_sheet_sidecar,
+        read_rows_sidecar,
         read_rows_slice,
         resolve_sheet_part,
     )
@@ -280,25 +283,13 @@ def read_excel_distributed(
     if not tasks:
         return spark.createDataFrame([], schema)
 
-    # worker-side import bootstrap: executors of a BARE session launched
-    # from a foreign cwd (the driver's plain session) don't have the repo
-    # on sys.path, and the module import inside the closure resolves
-    # by reference — capture the path as a string and insert it first
-    # (the same contract every mapInPandas codec here follows; the r11
-    # plain-session gate caught xl01 failing without it)
-    repo_root = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", ".."))
+    def frame(rows: list[list]) -> pd.DataFrame:
+        padded = [r[:width] + [None] * (width - len(r)) for r in rows]
+        return pd.DataFrame({names[i]: [r[i] for r in padded] for i in range(width)}, dtype=object)
 
     if sidecar is not None:
 
-        def parse_slices(batches):  # pragma: no cover — runs on executors
-            import sys  # noqa: PLC0415
-
-            if repo_root not in sys.path:
-                sys.path.insert(0, repo_root)
-            import pandas as pd  # noqa: PLC0415
-
-            from pyp_etl_pipeline_spark.sources.xlsx import read_rows_sidecar  # noqa: PLC0415
-
+        def parse_sidecar_slices(batches):  # pragma: no cover — runs on executors
             for pdf in batches:
                 for task in pdf.itertuples(index=False):
                     rows = read_rows_sidecar(
@@ -306,34 +297,17 @@ def read_excel_distributed(
                     )
                     if int(task.row_start) == 0:
                         rows = rows[1:]  # the header row lives in range 0
-                    padded = [r[:width] + [None] * (width - len(r)) for r in rows]
-                    yield pd.DataFrame(
-                        {names[i]: [r[i] for r in padded] for i in range(width)},
-                        dtype=object,
-                    )
+                    yield frame(rows)
 
         task_df = spark.createDataFrame(
             tasks, "sidecar string, xlsx string, row_start long, byte_start long, byte_end long"
         ).repartition(len(tasks))
-        return task_df.mapInPandas(parse_slices, schema)
+        return task_df.mapInPandas(parse_sidecar_slices, schema)
 
     def parse_slices(batches):  # pragma: no cover — runs on executors
-        import sys  # noqa: PLC0415
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        import pandas as pd  # noqa: PLC0415
-
-        from pyp_etl_pipeline_spark.sources.xlsx import read_rows_slice as slice_fn  # noqa: PLC0415
-
         for pdf in batches:
             for task in pdf.itertuples(index=False):
-                rows = slice_fn(task.path, task.part, int(task.start), int(task.end))
-                padded = [r[:width] + [None] * (width - len(r)) for r in rows]
-                yield pd.DataFrame(
-                    {names[i]: [r[i] for r in padded] for i in range(width)},
-                    dtype=object,
-                )
+                yield frame(read_rows_slice(task.path, task.part, int(task.start), int(task.end)))
 
     task_df = spark.createDataFrame(
         tasks, "path string, part string, start long, end long"

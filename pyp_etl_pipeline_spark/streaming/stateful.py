@@ -45,12 +45,9 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     """Per-user running totals with explicit GroupState (update mode).
     Arrow-batched: each micro-batch group arrives as pandas frames.
 
-    The state function is defined INSIDE this function on purpose:
-    cloudpickle serializes nested functions by value, while a
-    module-level function is pickled as an import reference that every
-    executor python worker must resolve — which fails whenever the
-    harness launches the session from a cwd without this repo on the
-    worker PYTHONPATH (the driver's environment, not ours)."""
+    Workers import the package because the session ships it
+    (``session.ship_package``), so the state function may live at any
+    scope; it is nested here for locality."""
 
     def update_user_state(
         key: tuple,

@@ -194,30 +194,52 @@ def test_truncated_payloads_raise_valueerror_not_indexerror():
             avcc_parse(rec[:cut])
 
 
-def test_permissive_mode_quarantines_bad_rows(spark):
-    """Corpus-scale contract: one corrupt blob yields NULL fields + an
-    error string; good rows in the same batch still parse."""
-    from pyp_etl_pipeline_spark.multimodal.h264 import (
-        avc_container_features,
-        mp4_avc_encode,
-        sps_encode,
-        sps_features,
-    )
+def _codec_operators():
+    """(operator, one good payload of a 640x480 stream) for each of the 8
+    permissive codec operators: stream and MP4-container tiers of
+    H.264, HEVC, AV1 and VP9."""
+    from pyp_etl_pipeline_spark.multimodal import av1, h264, h265, vp9
 
-    good = sps_encode(640, 480)
-    rows = [(0, good), (1, good[:10]), (2, b"\xde\xad\xbe\xef"), (3, good)]
+    return {
+        "h264_sps": (h264.sps_features, h264.sps_encode(640, 480)),
+        "h264_mp4": (h264.avc_container_features, h264.mp4_avc_encode(640, 480, 1000)),
+        "hevc_sps": (h265.hevc_sps_features, h265.hevc_sps_encode(640, 480)),
+        "hevc_mp4": (h265.hevc_container_features, h265.mp4_hevc_encode(640, 480, 1000)),
+        "av1_seq": (av1.av1_seq_features, av1.av1_sequence_header_encode(640, 480)),
+        "av1_mp4": (av1.av1_container_features, av1.mp4_av1_encode(640, 480, 1000)),
+        "vp9_frame": (vp9.vp9_frame_features, vp9.vp9_frame_header_encode(640, 480)),
+        "vp9_mp4": (vp9.vp9_container_features, vp9.mp4_vp9_encode(640, 480, 1000)),
+    }
+
+
+@pytest.mark.parametrize("codec", list(_codec_operators()))
+def test_permissive_mode_quarantines_bad_rows(spark, codec):
+    """Corpus-scale contract of every permissive codec operator: one
+    corrupt blob yields NULL fields + an error string while good rows in
+    the same batch still parse; strict mode fails the stage on the same
+    rows; the permissive schema is the strict schema plus ``error``."""
+    from pyspark.sql.types import StringType
+
+    operator, good = _codec_operators()[codec]
+    rows = [(0, good), (1, good[: len(good) // 2]), (2, b"\xde\xad\xbe\xef"), (3, good)]
     df = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = {r["media_id"]: r for r in sps_features(df, permissive=True).collect()}
-    assert out[0]["width"] == 640 and out[0]["error"] is None
-    assert out[3]["width"] == 640 and out[3]["error"] is None
+
+    permissive = operator(df, permissive=True)
+    out = {r["media_id"]: r.asDict() for r in permissive.collect()}
+    assert sorted(out) == [0, 1, 2, 3]
+    for ok in (0, 3):
+        assert out[ok]["width"] == 640 and out[ok]["error"] is None
+        assert out[ok].get("dims_match", True) is True
     for bad in (1, 2):
-        assert out[bad]["width"] is None
+        fields = {k: v for k, v in out[bad].items() if k not in ("media_id", "error")}
+        assert all(v is None for v in fields.values()), fields
         assert out[bad]["error"]
 
-    mp4 = mp4_avc_encode(320, 240, 1000)
-    rows = [(0, mp4), (1, mp4[: len(mp4) // 2]), (2, b"junk")]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = {r["media_id"]: r for r in avc_container_features(df, permissive=True).collect()}
-    assert out[0]["width"] == 320 and out[0]["dims_match"] is True
-    assert out[1]["width"] is None and out[1]["error"]
-    assert out[2]["width"] is None and out[2]["error"]
+    strict = operator(df)
+    with pytest.raises(Exception):  # noqa: B017 — the stage failure, whatever wraps it
+        strict.collect()
+
+    def pairs(schema):
+        return [(f.name, f.dataType) for f in schema.fields]
+
+    assert pairs(permissive.schema) == pairs(strict.schema) + [("error", StringType())]

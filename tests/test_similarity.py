@@ -494,3 +494,24 @@ def test_ivfpq_probe_all_equals_pq(spark):
     # with nprobe=1 the candidate set shrinks (a real restriction)
     narrow = similarity.ivfpq_topk(emb, q, coarse, books, nprobe=1, k=3)
     assert narrow.count() <= ivf.count()
+
+
+def test_lit_double_array_round_trips_special_values_bit_exact(spark):
+    """NaN, ±Infinity and -0.0 go through the string-cast route of the
+    fast SQL literal builder; every value must collect bit-identical
+    (compared as packed bytes, since NaN != NaN and -0.0 == 0.0)."""
+    import struct
+
+    vals = [math.nan, math.inf, -math.inf, -0.0, 0.1]
+    got = spark.range(1).select(similarity._lit_double_array(vals).alias("a")).first()["a"]
+    assert [struct.pack("<d", v) for v in got] == [struct.pack("<d", v) for v in vals]
+
+
+def test_bt_quotes_names_containing_backticks(spark):
+    """``_bt`` escapes an embedded backtick, and a select through the
+    quoted name resolves that column."""
+    name = "we`ird col"
+    assert similarity._bt(name) == "`we``ird col`"
+    df = spark.createDataFrame([(7,)], f"{similarity._bt(name)} long")
+    assert df.columns == [name]
+    assert df.selectExpr(similarity._bt(name)).first()[0] == 7

@@ -107,6 +107,11 @@ def main() -> int:
             .config("spark.sql.shuffle.partitions", "8")
             .getOrCreate()
         )
+        # ...and fetch the queries the way the driver does, through the
+        # entry module (which ships the package to the Python workers)
+        import __spark_entry__  # noqa: PLC0415
+
+        entry_queries = __spark_entry__.queries()
     else:
         spark = get_spark("correctness-check")
     con = duckdb.connect()
@@ -119,6 +124,8 @@ def main() -> int:
         if name_filter and not any(f in name for f in name_filter):
             continue
         t0 = time.time()
+        if plain:
+            fn = entry_queries[name]
         try:
             sdf = fn(spark, sf_dir)
             s_cols = sdf.columns
