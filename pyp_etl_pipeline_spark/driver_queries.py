@@ -12,9 +12,7 @@ Registry format: name -> (spark_fn(spark, sf_dir) -> DataFrame, oracle_sql | Non
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyp_etl_pipeline_spark import schema as S
@@ -22,10 +20,15 @@ from pyp_etl_pipeline_spark.functions import nulls, scoring, text, validation
 from pyp_etl_pipeline_spark.functions.aggregates import (  # noqa: F401  (re-exported for SQL twins)
     exact_avg,
     exact_sum,
+    finalize_avg,
+    finalize_sum,
+    micro_col,
     sql_exact_avg,
     sql_exact_sum,
 )
-from pyp_etl_pipeline_spark.operators import dedup, explode, guard, offerings, similarity, textan, upsert, windows
+from pyp_etl_pipeline_spark.operators import explode, guard, offerings, upsert
+from pyp_etl_pipeline_spark.operators.resolve import exact_resolve
+from pyp_etl_pipeline_spark.operators.review import backfill_canonical_names
 from pyp_etl_pipeline_spark.tables import load_table
 
 # --------------------------------------------------------------------------
@@ -33,11 +36,6 @@ from pyp_etl_pipeline_spark.tables import load_table
 # --------------------------------------------------------------------------
 
 SENTINELS_SQL = ", ".join(f"'{s}'" for s in S.SENTINEL_NULLS)
-
-
-def sql_valid(x: str) -> str:
-    """F1 is_valid_value."""
-    return f"({x} IS NOT NULL AND lower(trim({x})) NOT IN ({SENTINELS_SQL}))"
 
 
 def sql_null_normalize(x: str) -> str:
@@ -81,7 +79,7 @@ def sql_has_dietary(x: str) -> str:
 
 
 def sql_special_count(x: str) -> str:
-    return f"(length({x}) - length(regexp_replace({x}, '[!@#$%^&*()]', '', 'g')))"
+    return f"(length({x}) - length(regexp_replace({x}, '[{S.SPECIAL_CHARS}]', '', 'g')))"
 
 
 def sql_penalties(score: str, t: str, m: str) -> str:
@@ -205,12 +203,6 @@ GROUP BY 1, 2
 
 def q01_pricing_summary(spark: SparkSession, sf: str) -> DataFrame:
     li = load_table(spark, sf, "lineitem")
-    from pyp_etl_pipeline_spark.functions.aggregates import (  # noqa: PLC0415
-        finalize_avg,
-        finalize_sum,
-        micro_col,
-    )
-
     # seven aggregates share five inputs — pre-project the micro-unit
     # conversions ONCE (aggregate-buffer expressions aren't reliably
     # deduplicated; doing the floor+multiply per aggregate measured ~1.6x)
@@ -588,8 +580,6 @@ def _item_tokens(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def j01_exact_resolution(spark: SparkSession, sf: str) -> DataFrame:
-    from pyp_etl_pipeline_spark.operators.resolve import exact_resolve  # noqa: PLC0415
-
     items = _item_tokens(spark, sf)
     dim = _dim_tokens(spark, sf)
     out = exact_resolve(items, dim, item_col="item", title_col="title", id_col="ext_id")
@@ -658,8 +648,6 @@ FROM items i LEFT JOIN {_DIM_TOKENS_SQL} d ON lower(trim(i.title)) = lower(trim(
 
 
 def j12_canonical_backfill(spark: SparkSession, sf: str) -> DataFrame:
-    from pyp_etl_pipeline_spark.operators.review import backfill_canonical_names  # noqa: PLC0415
-
     items = _item_tokens(spark, sf).select(F.col("item")).distinct()
     dim = _dim_tokens(spark, sf)
     staged = items.join(

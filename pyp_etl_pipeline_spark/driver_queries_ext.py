@@ -4,116 +4,73 @@ dedup suite, ANN search, text analysis, streaming — plus the merged REGISTRY.
 
 from __future__ import annotations
 
-import atexit
 import os
 import shutil
-import tempfile
-import threading
 import uuid
 from collections.abc import Callable
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyp_etl_pipeline_spark import driver_queries as core
-from pyp_etl_pipeline_spark.functions import scoring
+from pyp_etl_pipeline_spark import driver_queries_ext3 as ext3
+from pyp_etl_pipeline_spark import driver_queries_ext4 as ext4
+from pyp_etl_pipeline_spark.functions import aggregates, masking, scoring, text
+from pyp_etl_pipeline_spark.functions.aggregates import (
+    _sql_micro,
+    exact_sum,
+    sql_exact_sum,
+    sql_finalize_sum,
+)
+from pyp_etl_pipeline_spark.functions.masking import PII_PATTERNS
+from pyp_etl_pipeline_spark.multimodal.binary_ops import decode_features
+from pyp_etl_pipeline_spark.multimodal.codecs import wav_encode_pcm16
 from pyp_etl_pipeline_spark.multimodal.rowmap import synth_media
-from pyp_etl_pipeline_spark.operators import dedup, resolve, similarity, textan, windows
+from pyp_etl_pipeline_spark.operators import (
+    bpe,
+    dedup,
+    export,
+    graph,
+    packing,
+    quality,
+    resolve,
+    sampling,
+    similarity,
+    sketch,
+    textan,
+    windows,
+)
+from pyp_etl_pipeline_spark.operators.asof import asof_join
+from pyp_etl_pipeline_spark.operators.dedup import fingerprint, normalized_text, word_shingles
+from pyp_etl_pipeline_spark.operators.export import sql_zvalue
+from pyp_etl_pipeline_spark.operators.guard import semantically_valid_match
+from pyp_etl_pipeline_spark.operators.ranges import interval_join
+from pyp_etl_pipeline_spark.operators.sampling import BUCKETS, sql_hash_bucket
+from pyp_etl_pipeline_spark.operators.scd import scd2_history
 from pyp_etl_pipeline_spark.operators.similarity import _hyperplanes
-from pyp_etl_pipeline_spark.tables import load_table
-
-
-# One token per interpreter: scratch dirs built from it cannot collide
-# across concurrent sessions (bench + correctness gate + parallel CI all
-# write/rmtree their own directories — ADVICE r8: fixed names raced).
-_SCRATCH_TOKEN = f"{os.getpid()}_{uuid.uuid4().hex[:8]}"
-
-# Every path handed out by scratch_path; swept at interpreter exit so
-# gate/bench/CI processes don't leak parquet copies into /tmp (the old
-# fixed names self-replaced across runs; per-process names don't).
-_SCRATCH_PATHS: set[str] = set()
-
-
-@atexit.register
-def _sweep_scratch() -> None:
-    for p in _SCRATCH_PATHS:
-        shutil.rmtree(p, ignore_errors=True)
-
-
-def scratch_path(tag: str) -> str:
-    """Per-process-unique scratch directory path for queries that write
-    intermediate files (format round-trips, streaming file sources).
-    Tracked and rmtree'd at process exit."""
-    p = os.path.join(tempfile.gettempdir(), f"pyp_{tag}_{_SCRATCH_TOKEN}")
-    _SCRATCH_PATHS.add(p)
-    return p
-
-
-def _load_corpus(spark: SparkSession, sf: str, name: str) -> DataFrame:
-    """Corpus tables (documents/embeddings) arrive as one small parquet file
-    -> one scan partition, which serializes the heavy per-row compute
-    (shingles, md5, simhash, dot products) onto a single core in local
-    bench runs. Round-robin repartition to the session's parallelism; at
-    cluster scale the input already has many splits and the extra shuffle
-    of (id, payload) is negligible next to the per-row compute it feeds."""
-    df = load_table(spark, sf, name)
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)
-    return df
-
-
-def _load_corpus_unique(spark: SparkSession, sf: str, name: str) -> DataFrame:
-    """Idempotent-ingest variant for operators whose contract keys on
-    row identity (packing order, ANN ids, span election, budget fill):
-    at-least-once delivery means the landing zone can hold FULL-ROW
-    duplicates, and a value-based distributed engine cannot
-    deterministically distinguish identical copies — so they are
-    collapsed up front (full-row distinct: always deterministic, and
-    exactly the dedup the ingest tier performs once at 100 TB rather
-    than per query). Identity on already-unique data; the --dupes gate
-    family certifies the behavior. Twins mirror it with
-    ``FROM (SELECT DISTINCT * FROM <table>)``.
-
-    The repartition comes AFTER the distinct, unconditionally: AQE
-    coalesces the distinct's small shuffle output back to ONE partition
-    (tiny bytes, heavy downstream per-row compute — the classic trap),
-    and an explicitly-numbered repartition is exempt from AQE
-    coalescing. Repartitioning BEFORE the distinct is useless: the
-    distinct's own exchange re-collapses it. (Measured: dd09's shingle
-    stage 7.0s -> parallel once this ordering landed.)
-
-    Materialized ONCE per (session, sf, table) and persisted: at 100 TB
-    the idempotent-ingest distinct runs once in the ingest tier, not
-    per query — the session-level cache is the local analog (VERDICT r8
-    item 2: the per-query distinct taxed cp01/tx05/mm08/j16/dc01/mx02
-    by 1.2-1.4x)."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf), name)
-    with _UNIQUE_LOCK:
-        # evict entries from stopped sessions: their persisted handles pin
-        # dead JVM references and can never be returned again (a restarted
-        # session gets a fresh applicationId, but don't rely on that).
-        for k in [k for k, v in _UNIQUE_CACHE.items() if _session_stopped(v)]:
-            _UNIQUE_CACHE.pop(k, None)
-        cached = _UNIQUE_CACHE.get(key)
-        if cached is not None:
-            return cached
-        target = spark.sparkContext.defaultParallelism
-        df = load_table(spark, sf, name).distinct().repartition(target).persist()
-        _UNIQUE_CACHE[key] = df
-        return df
-
-
-def _session_stopped(df: DataFrame) -> bool:
-    try:
-        sc = df.sparkSession.sparkContext
-        return sc._jsc is None or sc._jsc.sc().isStopped()
-    except Exception:  # noqa: BLE001 — any failure to reach the JVM means dead
-        return True
-
-
-_UNIQUE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-_UNIQUE_LOCK = threading.Lock()
+from pyp_etl_pipeline_spark.operators.sketch import sql_hll_distinct
+from pyp_etl_pipeline_spark.operators.skew import salted_join
+from pyp_etl_pipeline_spark.operators.windows import group_zscores
+from pyp_etl_pipeline_spark.schema import AUTO_RESOLVE_THRESHOLD
+from pyp_etl_pipeline_spark.sources.bucketed import read_table, write_bucketed
+from pyp_etl_pipeline_spark.sources.sinks import read_current_snapshot
+from pyp_etl_pipeline_spark.streaming.events import (
+    read_events_stream,
+    run_to_memory,
+    streaming_session_agg,
+    streaming_static_enrich,
+    streaming_tumbling_agg,
+    streaming_window_join,
+)
+from pyp_etl_pipeline_spark.streaming.upsert_sink import run_streaming_upsert
+from pyp_etl_pipeline_spark.tables import (
+    load_corpus,
+    load_corpus_unique,
+    load_events,
+    load_table,
+    scratch_path,
+)
 
 
 # --------------------------------------------------------------------------
@@ -277,9 +234,6 @@ def rv01_review_workflow(spark: SparkSession, sf: str) -> DataFrame:
     resolve) auto-approves when the semantic guard passes; everything
     else stays pending. Output: one row per review item with its final
     state."""
-    from pyp_etl_pipeline_spark.operators.guard import semantically_valid_match  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.schema import AUTO_RESOLVE_THRESHOLD  # noqa: PLC0415
-
     r = _fuzzy_ranked(spark, sf)
     queue = r.filter(
         (F.col("rnk") == 1)
@@ -303,8 +257,6 @@ def rv01_review_workflow(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _rv01_sql() -> str:
-    from pyp_etl_pipeline_spark.schema import AUTO_RESOLVE_THRESHOLD  # noqa: PLC0415
-
     guard = core.sql_semantic_guard("lower(trim(item))", "lower(trim(suggested_name))")
     return (
         _fuzzy_cte()
@@ -747,7 +699,7 @@ FROM s GROUP BY 1, 2
 # --------------------------------------------------------------------------
 
 def dd01_exact_dup_histogram(spark: SparkSession, sf: str) -> DataFrame:
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     fps = d.select(dedup.fingerprint("text").alias("fp"))
     return (
         fps.groupBy("fp")
@@ -764,7 +716,7 @@ SELECT c AS dup_count, count(*) AS n_fingerprints FROM fp GROUP BY 1
 
 
 def dd02_ngram_jaccard_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    return dedup.shingle_pairs_jaccard(_load_corpus(spark, sf, "documents"), threshold=0.5)
+    return dedup.shingle_pairs_jaccard(load_corpus(spark, sf, "documents"), threshold=0.5)
 
 
 _SHINGLE_CTE = f"""
@@ -795,7 +747,7 @@ def dd04_dup_clusters(spark: SparkSession, sf: str) -> DataFrame:
     (``dedup.dup_clusters``); oracle: recursive-CTE transitive closure +
     min-reachable-id (exact for the small sf, while the Spark loop is
     the O(diameter)-rounds shape that survives 100 TB)."""
-    pairs = dedup.shingle_pairs_jaccard(_load_corpus(spark, sf, "documents"), threshold=0.5)
+    pairs = dedup.shingle_pairs_jaccard(load_corpus(spark, sf, "documents"), threshold=0.5)
     return dedup.dup_clusters(pairs)
 
 
@@ -832,7 +784,7 @@ def dd07_neardup_dedup(spark: SparkSession, sf: str) -> DataFrame:
     twin composes the identical stages over the recursive-CTE closure,
     so the composition semantics — who survives, with what cluster
     size — are hash-certified."""
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     pairs = dedup.shingle_pairs_jaccard(d, threshold=0.5)
     clusters = dedup.dup_clusters(pairs)
     sizes = clusters.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
@@ -864,7 +816,7 @@ def dc01_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     with any eval doc. The eval shingle set is broadcast — the corpus
     never shuffles (the standard test-set-leakage guard for a training
     corpus)."""
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     bench = d.filter(F.col("doc_id") % 25 == 0)
     corpus = d.filter(F.col("doc_id") % 25 != 0)
     return dedup.decontaminate(corpus, bench).withColumnRenamed("id", "doc_id")
@@ -890,7 +842,7 @@ FROM corpus LEFT JOIN hits USING (doc_id)
 
 
 def dd03_minhash_lsh_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    return dedup.minhash_lsh_pairs(_load_corpus(spark, sf, "documents"), threshold=0.5)
+    return dedup.minhash_lsh_pairs(load_corpus(spark, sf, "documents"), threshold=0.5)
 
 
 def _minhash_sig_sql(src: str, suffix: str) -> str:
@@ -957,7 +909,7 @@ def dd05_incremental_minhash(spark: SparkSession, sf: str) -> DataFrame:
     signature index (plus a within-batch self-join) — the corpus is never
     self-joined, which is the whole point at 100 TB: per-ingest cost is
     O(batch) + collisions, not O(corpus^2 / buckets)."""
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     new_docs = d.filter(F.col("doc_id") % 5 == 0)
     corpus = d.filter(F.col("doc_id") % 5 != 0)
     return dedup.minhash_lsh_pairs_incremental(new_docs, corpus, threshold=0.5)
@@ -1004,7 +956,7 @@ def dd06_span_dedup(spark: SparkSession, sf: str) -> DataFrame:
     the single-node ``row_number() OVER (PARTITION BY span)`` — matching
     rebuilt-text hashes prove the distributed election picks exactly the
     sequential winners."""
-    out = dedup.span_dedup(_load_corpus_unique(spark, sf, "documents"), k=10)
+    out = dedup.span_dedup(load_corpus_unique(spark, sf, "documents"), k=10)
     return out.select("doc_id", "n_spans", "n_kept", F.md5("text").alias("text_fp"))
 
 
@@ -1041,7 +993,7 @@ def dc02_decontaminate_spans(spark: SparkSession, sf: str) -> DataFrame:
     from the remaining docs and the text rebuilt — surgical removal vs
     dc01's doc-level flags. Broadcast bench shingles; corpus never
     shuffles before the anti-join."""
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     bench = d.filter(F.col("doc_id") % 25 == 0)
     corpus = d.filter(F.col("doc_id") % 25 != 0)
     out = dedup.decontaminate_spans(corpus, bench)
@@ -1085,7 +1037,7 @@ def sh01_simhash_pairs(spark: SparkSession, sf: str) -> DataFrame:
     twin reproduces the md5 bit-vote fingerprints exactly (verified
     bit-for-bit) and applies the SAME 4x16-bit chunk-blocking condition,
     so even hamming 4-6 pairs that blocking misses match across engines."""
-    return dedup.simhash_pairs(_load_corpus(spark, sf, "documents"), max_hamming=6)
+    return dedup.simhash_pairs(load_corpus(spark, sf, "documents"), max_hamming=6)
 
 
 def _sh01_sql() -> str:
@@ -1131,7 +1083,7 @@ SH01_SQL = _sh01_sql()
 # --------------------------------------------------------------------------
 
 def ann01_cosine_topk(spark: SparkSession, sf: str) -> DataFrame:
-    emb = _load_corpus(spark, sf, "embeddings")
+    emb = load_corpus(spark, sf, "embeddings")
     q = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -1155,7 +1107,7 @@ QUALIFY match_rank <= 5
 
 
 def ann02_lsh_topk(spark: SparkSession, sf: str) -> DataFrame:
-    emb = _load_corpus(spark, sf, "embeddings")
+    emb = load_corpus(spark, sf, "embeddings")
     q = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -1197,7 +1149,7 @@ def nd01_embed_neardup(spark: SparkSession, sf: str) -> DataFrame:
     ``cosine_neardup_pairs(..., exact=True)`` and is pinned against the
     bucketed path by ``tests/test_similarity.py`` (subset + exact-dup
     recall); it is deliberately NOT the registered plan."""
-    emb = _load_corpus(spark, sf, "embeddings")
+    emb = load_corpus(spark, sf, "embeddings")
     # n_planes pinned so the static SQL twin reproduces the buckets;
     # outside oracle-land the default (None) derives planes from the
     # corpus size (similarity.derive_n_planes)
@@ -1232,7 +1184,7 @@ ND01_SQL = _nd01_sql()
 # --------------------------------------------------------------------------
 
 def tx01_quality_features(spark: SparkSession, sf: str) -> DataFrame:
-    return textan.quality_features(_load_corpus(spark, sf, "documents"))
+    return textan.quality_features(load_corpus(spark, sf, "documents"))
 
 
 _TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), w -> w <> '')"
@@ -1260,7 +1212,7 @@ FROM feats
 
 
 def tx02_token_counts(spark: SparkSession, sf: str) -> DataFrame:
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     return d.select(
         "doc_id",
         textan.token_count("text").cast("long").alias("n_ws_tokens"),
@@ -1277,7 +1229,7 @@ FROM documents
 
 
 def tx03_language_id(spark: SparkSession, sf: str) -> DataFrame:
-    return textan.language_scores(_load_corpus(spark, sf, "documents"))
+    return textan.language_scores(load_corpus(spark, sf, "documents"))
 
 
 def _tx03_sql() -> str:
@@ -1301,7 +1253,7 @@ TX03_SQL = _tx03_sql()
 
 
 def tx04_fingerprints(spark: SparkSession, sf: str) -> DataFrame:
-    return textan.document_fingerprints(_load_corpus(spark, sf, "documents"))
+    return textan.document_fingerprints(load_corpus(spark, sf, "documents"))
 
 
 TX04_SQL = f"""
@@ -1316,7 +1268,7 @@ FROM n
 def tx05_repetition(spark: SparkSession, sf: str) -> DataFrame:
     """Within-doc repeated-n-gram fraction (C4/Gopher-style quality
     filter signal); pure per-row array ops, no shuffle."""
-    out = textan.repetition_features(_load_corpus(spark, sf, "documents"))
+    out = textan.repetition_features(load_corpus(spark, sf, "documents"))
     return out.withColumnRenamed("id", "doc_id")
 
 
@@ -1349,7 +1301,7 @@ def tx14_bigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
     unlike tx06's unigram score. The twin replays the pairing (positional
     list indexing), both count models, and the micro-quantized exact
     mean, so the whole bigram chain is hash-certified."""
-    out = textan.bigram_logprob(_load_corpus(spark, sf, "documents"))
+    out = textan.bigram_logprob(load_corpus(spark, sf, "documents"))
     return out.withColumnRenamed("id", "doc_id")
 
 
@@ -1377,7 +1329,7 @@ def tx06_unigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
     under the corpus's own unigram model (rare-token-heavy docs score
     low). Two map-side-combined shuffles; corpus total via broadcast
     1-row aggregate."""
-    out = textan.unigram_logprob(_load_corpus(spark, sf, "documents"))
+    out = textan.unigram_logprob(load_corpus(spark, sf, "documents"))
     return out.withColumnRenamed("id", "doc_id")
 
 
@@ -1405,12 +1357,6 @@ def ex02_export_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     physically landed on disk carry the full corpus, the right rows in
     the right shard dirs, with nothing lost or duplicated by the
     write/read cycle."""
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.operators import export  # noqa: PLC0415
-
     # process-unique scratch path + pre-clean: repeat invocations within
     # a session replace the shard dir; concurrent sessions never collide
     path = scratch_path("ex02_shards")
@@ -1430,7 +1376,7 @@ def tx10_tfidf_topk(spark: SparkSession, sf: str) -> DataFrame:
     twin replays the identical tf / document-frequency / ln pipeline
     single-node, so tokenization, the idf quantization contract, AND the
     top-k tie rule are all hash-certified."""
-    out = textan.tfidf_topk(_load_corpus(spark, sf, "documents"), k=3)
+    out = textan.tfidf_topk(load_corpus(spark, sf, "documents"), k=3)
     return out.withColumnRenamed("id", "doc_id")
 
 
@@ -1463,8 +1409,6 @@ def ex01_shard_stats(spark: SparkSession, sf: str) -> DataFrame:
     order-independent content checksum; the DuckDB twin recomputes the
     same hash family, so the shard CONTRACT (not just the counts) is
     what the gate verifies."""
-    from pyp_etl_pipeline_spark.operators import export  # noqa: PLC0415
-
     d = export.shard_assign(load_table(spark, sf, "documents"), "doc_id", 16)
     return d.groupBy("shard").agg(
         F.count("*").alias("n_docs"),
@@ -1500,12 +1444,6 @@ def ex03_jsonl_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     as ex01/ex02. Certifies that JSON serialization round-trips the
     full corpus (ids, counts, text lengths) with nothing lost,
     duplicated, or mis-escaped by the write/read cycle."""
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.operators import export  # noqa: PLC0415
-
     path = scratch_path("ex03_jsonl")
     shutil.rmtree(path, ignore_errors=True)
     export.write_jsonl_sharded(
@@ -1544,8 +1482,6 @@ def rj01_interval_join(spark: SparkSession, sf: str) -> DataFrame:
     the join is a shuffled hash join on (user_id, bin). The left-outer
     accounting (errors with zero clicks) composes on top by joining the
     aggregated counts back to the interval side."""
-    from pyp_etl_pipeline_spark.operators.ranges import interval_join  # noqa: PLC0415
-
     # idempotent ingest: at-least-once redelivery duplicates the same
     # event_id; interval accounting is keyed on it (--dupes contract)
     ev = load_table(spark, sf, "events").distinct()
@@ -1585,7 +1521,7 @@ def tx07_gopher_rules(spark: SparkSession, sf: str) -> DataFrame:
     The twin recomputes every signal AND every threshold comparison on
     the unrounded doubles, so a dialect drift in division or comparison
     semantics flips a boolean and breaks the hash."""
-    out = textan.gopher_quality_flags(_load_corpus(spark, sf, "documents"))
+    out = textan.gopher_quality_flags(load_corpus(spark, sf, "documents"))
     return out.withColumnRenamed("id", "doc_id")
 
 
@@ -1625,8 +1561,6 @@ TX07_SQL = _tx07_sql()
 def st01_streaming_tumbling(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming tumbling agg driven to completion over the static events
     parquet; one batch -> identical to the batch tumbling query."""
-    from pyp_etl_pipeline_spark.streaming.events import read_events_stream, streaming_tumbling_agg  # noqa: PLC0415
-
     name = "st01_out_" + uuid.uuid4().hex[:8]
     stream = read_events_stream(spark, sf)
     agg = streaming_tumbling_agg(stream)
@@ -1648,7 +1582,7 @@ def tx09_token_topk(spark: SparkSession, sf: str) -> DataFrame:
     lexicographically smaller token). Map-side-combined count plus
     TakeOrdered — no global sort. The 100 TB shape for 'what dominates
     my corpus' diagnostics."""
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     toks = d.select(
         F.explode(F.split(dedup.normalized_text("text"), " ")).alias("tok")
     ).filter(F.col("tok") != "")
@@ -1703,8 +1637,6 @@ def w06_group_zscores(spark: SparkSession, sf: str) -> DataFrame:
     broadcast back), flag |z| > 3. The twin recomputes the identical
     integer moments and the identical double arithmetic order, so mean,
     variance, z, AND the flag are hash-certified."""
-    from pyp_etl_pipeline_spark.operators.windows import group_zscores  # noqa: PLC0415
-
     ev = load_table(spark, sf, "events")
     return group_zscores(ev, "event_type", "value", "event_id").withColumnRenamed("id", "event_id")
 
@@ -1731,9 +1663,7 @@ def ck01_document_chunks(spark: SparkSession, sf: str) -> DataFrame:
     identical window arithmetic (chunk count, slice bounds, overlap)
     with DuckDB list slicing, so the coverage/overlap contract is
     hash-certified, not just row counts."""
-    from pyp_etl_pipeline_spark.operators import packing  # noqa: PLC0415
-
-    out = packing.chunk_documents(_load_corpus(spark, sf, "documents"), chunk_tokens=64, overlap=8)
+    out = packing.chunk_documents(load_corpus(spark, sf, "documents"), chunk_tokens=64, overlap=8)
     return out.withColumnRenamed("id", "doc_id")
 
 
@@ -1755,8 +1685,6 @@ def a11_cube_summary(spark: SparkSession, sf: str) -> DataFrame:
     grouping combinations of (status, priority) in one pass — Spark
     expands to a single expand+hash-agg, no re-scan per grouping set.
     Revenue uses the order-independent scaled-long sum."""
-    from pyp_etl_pipeline_spark.functions.aggregates import exact_sum  # noqa: PLC0415
-
     o = load_table(spark, sf, "orders")
     return (
         o.cube("o_orderstatus", "o_orderpriority")
@@ -1765,8 +1693,6 @@ def a11_cube_summary(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _a11_sql() -> str:
-    from pyp_etl_pipeline_spark.functions.aggregates import sql_exact_sum  # noqa: PLC0415
-
     return f"""
 SELECT o_orderstatus, o_orderpriority, count(*) AS n_orders,
        {sql_exact_sum("o_totalprice")} AS revenue
@@ -1784,8 +1710,7 @@ def tx12_ngram_novelty(spark: SparkSession, sf: str) -> DataFrame:
     analytic cousin). Two map-side-combined shuffles (per-gram doc
     counts over the already-distinct per-doc shingles, then the per-doc
     rollup); the score is integer micro math."""
-    d = _load_corpus(spark, sf, "documents")
-    from pyp_etl_pipeline_spark.operators.dedup import word_shingles  # noqa: PLC0415
+    d = load_corpus(spark, sf, "documents")
 
     sh = d.select(F.col("doc_id"), F.explode(word_shingles("text", 3)).alias("g"))
     cnt = sh.groupBy("g").agg(F.count("*").alias("nd"))
@@ -1827,7 +1752,7 @@ def tx13_pmi_collocations(spark: SparkSession, sf: str) -> DataFrame:
     (``textan.pmi_bigrams``, min_count=5): the classic phrase detector.
     Integer micro-quantized rank key, ties bigram-ascending; the twin
     replays counts, probabilities, and ln in closed SQL form."""
-    return textan.pmi_bigrams(_load_corpus(spark, sf, "documents"), k=20, min_count=5)
+    return textan.pmi_bigrams(load_corpus(spark, sf, "documents"), k=20, min_count=5)
 
 
 def _tx13_sql() -> str:
@@ -1890,9 +1815,6 @@ def mm06_audio_features(spark: SparkSession, sf: str) -> DataFrame:
     feature analytically predictable from doc_id, so the DuckDB twin
     recomputes ZCR/peak/RMS/duration in closed form — an endianness,
     sign, or off-by-one bug in the PCM path breaks the hash."""
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import decode_features  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.multimodal.codecs import wav_encode_pcm16  # noqa: PLC0415
-
     def ramp_clip(i: int) -> bytes:
         k = 1 + i % 7
         return wav_encode_pcm16([(((j * k) % 256) - 128) * 64 for j in range(100 + i % 50)], 8000)
@@ -1930,8 +1852,6 @@ def dq01_expectation_report(spark: SparkSession, sf: str) -> DataFrame:
     (orders.o_custkey -> customer.c_custkey, one anti-join). The twin
     recomputes every metric as plain SQL aggregates — thresholds,
     fractions, and pass booleans all hash-certified."""
-    from pyp_etl_pipeline_spark.operators import quality  # noqa: PLC0415
-
     c = load_table(spark, sf, "customer")
     o = load_table(spark, sf, "orders")
     rep = quality.expectation_report(
@@ -1971,8 +1891,6 @@ def cd01_snapshot_diff(spark: SparkSession, sf: str) -> DataFrame:
     so all three change kinds appear. One full-outer join on the key;
     UPDATE detection is null-safe per tracked column. The twin runs the
     identical full-outer + IS DISTINCT FROM logic."""
-    from pyp_etl_pipeline_spark.operators import quality  # noqa: PLC0415
-
     o = load_table(spark, sf, "orders")
     k = F.col("o_orderkey")
     old = o.filter(k % 10 != 0).select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -2014,8 +1932,6 @@ def px02_pseudonymization(spark: SparkSession, sf: str) -> DataFrame:
     precisely so the referential-integrity property is visible in the
     output). The twin rebuilds every split/hash/interleave step, so the
     token derivation contract is hash-certified end to end."""
-    from pyp_etl_pipeline_spark.functions import masking  # noqa: PLC0415
-
     d = load_table(spark, sf, "documents")
     k = F.col("doc_id")
     injected = F.concat(
@@ -2028,8 +1944,6 @@ def px02_pseudonymization(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _px02_sql() -> str:
-    from pyp_etl_pipeline_spark.functions.masking import PII_PATTERNS  # noqa: PLC0415
-
     def rebuild(x: str, cls: str) -> str:
         pat = PII_PATTERNS[cls].replace("'", "''")
         parts = f"string_split_regex({x}, '{pat}')"
@@ -2067,12 +1981,6 @@ def bk01_bucketed_join(spark: SparkSession, sf: str) -> DataFrame:
     in tests/test_bucketed.py; this query certifies the bucketed
     write+read path produces correct DATA on the real tables). The twin
     is the plain join — storage layout must not change results."""
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    from urllib.parse import urlparse  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.sources.bucketed import read_table, write_bucketed  # noqa: PLC0415
-
     li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_quantity")
     o = load_table(spark, sf, "orders").select("o_orderkey", "o_orderstatus")
     # fixed names + overwrite: repeat invocations replace, never
@@ -2114,9 +2022,6 @@ def w07_rolling_30d_revenue(spark: SparkSession, sf: str) -> DataFrame:
     does not cover. The rolling sum runs over micro-unit LONGS
     (``functions/aggregates``), so it is order-independent and exact;
     the twin runs the identical integer window + finalize."""
-    from pyp_etl_pipeline_spark.functions import aggregates  # noqa: PLC0415
-    from pyspark.sql import Window  # noqa: PLC0415
-
     o = load_table(spark, sf, "orders")
     day = F.datediff(F.col("o_orderdate"), F.lit("1970-01-01").cast("date"))
     base = o.select(
@@ -2134,8 +2039,6 @@ def w07_rolling_30d_revenue(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _w07_sql() -> str:
-    from pyp_etl_pipeline_spark.functions.aggregates import _sql_micro, sql_finalize_sum  # noqa: PLC0415
-
     return f"""
 WITH base AS (
   SELECT o_custkey, o_orderkey,
@@ -2195,8 +2098,6 @@ def w05_ntile_quartiles(spark: SparkSession, sf: str) -> DataFrame:
     Deterministic total order (balance desc, key asc); ntile's
     remainder-to-early-buckets rule is identical in both engines and is
     what the hash certifies."""
-    from pyspark.sql import Window  # noqa: PLC0415
-
     c = load_table(spark, sf, "customer")
     w = Window.partitionBy("c_mktsegment").orderBy(
         F.col("c_acctbal").desc(), F.col("c_custkey").asc()
@@ -2287,7 +2188,7 @@ def pp01_pretraining_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     crosses the wire twice. The twin replays the identical five stages
     as CTEs, so STAGE ORDER (dedup-over-survivors, not
     dedup-over-corpus) is part of what the hash certifies."""
-    d = _load_corpus_unique(spark, sf, "documents")
+    d = load_corpus_unique(spark, sf, "documents")
     # both gates run in keep-columns mode: pure map-only column algebra
     # appended to the corpus row — NO join-back against the corpus
     d1 = (
@@ -2303,8 +2204,6 @@ def pp01_pretraining_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     # exact dedup without a join-back: keeper election is ONE map-side-
     # combinable min(struct) aggregate keyed by the content fingerprint
     # (doc_id unique -> deterministic winner row)
-    from pyp_etl_pipeline_spark.operators.dedup import fingerprint, normalized_text  # noqa: PLC0415
-
     d3 = (
         d2.select(fingerprint(normalized_text("text")).alias("__fp"), "doc_id", "text", "lang_guess")
         .groupBy("__fp")
@@ -2329,15 +2228,12 @@ def pp01_pretraining_pipeline(spark: SparkSession, sf: str) -> DataFrame:
         .select(F.col("id").alias("doc_id"))
     )
     d4 = corpus.join(contaminated, "doc_id", "left_anti")
-    from pyp_etl_pipeline_spark.operators import sampling  # noqa: PLC0415
 
     out = sampling.hash_split(d4, "doc_id", {"train": 0.9, "val": 0.05, "test": 0.05})
     return out.select("doc_id", "lang_guess", "split")
 
 
 def _pp01_sql() -> str:
-    from pyp_etl_pipeline_spark.operators.sampling import BUCKETS, sql_hash_bucket  # noqa: PLC0415
-
     stops = "[" + ", ".join(f"'{s}'" for s in textan.GOPHER_REQUIRED_STOPWORDS) + "]"
     nw = f"len({_TOKS})"
     mwl = f"(CASE WHEN {nw} = 0 THEN 0.0 ELSE list_sum(list_transform({_TOKS}, w -> length(w))) / {nw} END)"
@@ -2380,7 +2276,7 @@ FROM final
     # idempotent ingest, applied to EVERY composed fragment at once
     # (the language-ID and shingle sub-builders are shared with other
     # twins and keep their raw scans there): mirrors the Spark side's
-    # _load_corpus_unique so at-least-once duplicates collapse up front.
+    # load_corpus_unique so at-least-once duplicates collapse up front.
     return sql.replace("FROM documents", "FROM (SELECT DISTINCT * FROM documents) AS documents")
 
 
@@ -2404,7 +2300,6 @@ def a10_length_histogram(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy("bin_lo")
         .agg(F.count("*").alias("n_docs"))
     )
-    from pyspark.sql import Window  # noqa: PLC0415
 
     w = Window.orderBy("bin_lo").rowsBetween(Window.unboundedPreceding, 0)
     total = bins.agg(F.sum("n_docs").alias("total"))
@@ -2442,7 +2337,7 @@ def tx11_quality_percentile_gate(spark: SparkSession, sf: str) -> DataFrame:
     (doc, n_tokens) pairs — swap in approx_percentile when 1e-3 cut
     error is acceptable; the gate keeps the exact one to stay
     hash-certifiable."""
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     scored = d.select("doc_id", textan.token_count("text").alias("n_tokens"))
     thr = scored.agg(F.percentile("n_tokens", F.lit(0.25)).alias("thr"))
     return (
@@ -2473,9 +2368,6 @@ def sk01_salted_join(spark: SparkSession, sf: str) -> DataFrame:
     the plan-level fix for a hot key AQE can't split. The twin is the
     PLAIN join + rollup, so the gate certifies salting's exact
     equivalence on real data, not just the unit fixture."""
-    from pyp_etl_pipeline_spark.functions.aggregates import exact_sum  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.operators.skew import salted_join  # noqa: PLC0415
-
     li = load_table(spark, sf, "lineitem").select("l_suppkey", "l_quantity")
     sup = load_table(spark, sf, "supplier").select(
         F.col("s_suppkey").alias("l_suppkey"), "s_nationkey"
@@ -2488,8 +2380,6 @@ def sk01_salted_join(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _sk01_sql() -> str:
-    from pyp_etl_pipeline_spark.functions.aggregates import sql_exact_sum  # noqa: PLC0415
-
     return f"""
 SELECT s.s_nationkey, count(*) AS n_items, {sql_exact_sum("l.l_quantity")} AS sum_qty
 FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
@@ -2507,8 +2397,6 @@ def j14_scd2_history(spark: SparkSession, sf: str) -> DataFrame:
     consecutive equal statuses collapse into [valid_from, valid_to)
     rows with an is_current flag. One shuffle; both windows share one
     sort. The twin runs the identical lag/lead SQL single-node."""
-    from pyp_etl_pipeline_spark.operators.scd import scd2_history  # noqa: PLC0415
-
     o = load_table(spark, sf, "orders")
     log = (
         o.groupBy(F.col("o_custkey"), F.col("o_orderdate").alias("ts"))
@@ -2547,9 +2435,6 @@ def j16_point_in_time_status(spark: SparkSession, sf: str) -> DataFrame:
     no BNLJ range join). Probe arithmetic is timestamp + INTERVAL
     (tz-free); the twin uses DuckDB's native ASOF LEFT JOIN, so two
     engines' temporal-join semantics certify each other."""
-    from pyp_etl_pipeline_spark.operators.asof import asof_join  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.operators.scd import scd2_history  # noqa: PLC0415
-
     o = load_table(spark, sf, "orders")
     log = (
         o.groupBy(F.col("o_custkey"), F.col("o_orderdate").alias("ts"))
@@ -2588,7 +2473,7 @@ def ann04_kmeans_clusters(spark: SparkSession, sf: str) -> DataFrame:
     distance bit-for-bit: the gate certifies the DISTRIBUTED clustering
     loop (literal-broadcast assignment pass + one (cluster,dim)-combined
     shuffle per iteration) against a sequential reference."""
-    emb = _load_corpus_unique(spark, sf, "embeddings")
+    emb = load_corpus_unique(spark, sf, "embeddings")
     cents = similarity.kmeans_fit(emb, k=8, n_iter=2)
     out = similarity.kmeans_assign(emb, cents)
     return out.select(F.col("id").alias("vec_id"), "cluster_id", F.col("dist").alias("dist"))
@@ -2651,7 +2536,7 @@ def sd01_semantic_dedup(spark: SparkSession, sf: str) -> DataFrame:
     clustering CTE (exact integer micro math — bit-for-bit assignments)
     plus the within-cluster pairwise cosine, so BOTH the distributed
     quantizer and the greedy keep-lowest-id rule are hash-certified."""
-    emb = _load_corpus_unique(spark, sf, "embeddings")
+    emb = load_corpus_unique(spark, sf, "embeddings")
     cents = similarity.kmeans_fit(emb, k=8, n_iter=2)
     return similarity.semantic_dedup(emb, cents, threshold=0.25).select(
         F.col("id").alias("vec_id"), "cluster_id", "kept_by", "cos_to_keeper"
@@ -2687,7 +2572,7 @@ def ann05_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     unrolls the per-subspace training, encoding, LUT build, and ADC
     ranking in SQL on the same exact integers, so codebooks, codes, and
     every ADC distance are hash-certified bit-for-bit."""
-    emb = _load_corpus_unique(spark, sf, "embeddings")
+    emb = load_corpus_unique(spark, sf, "embeddings")
     books = similarity.pq_fit(emb, m=4, ksub=8, n_iter=1)
     q = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
@@ -2794,8 +2679,6 @@ def tx08_html_extract(spark: SparkSession, sf: str) -> DataFrame:
     decodes entities (&amp; last — ordering is part of the contract),
     collapses whitespace. The twin applies the identical regex chain in
     DuckDB, so tag-regex or replace-order drift breaks the hash."""
-    from pyp_etl_pipeline_spark.functions import text as textfn  # noqa: PLC0415
-
     d = load_table(spark, sf, "documents")
     k = F.col("doc_id")
     html = F.concat(
@@ -2810,7 +2693,7 @@ def tx08_html_extract(spark: SparkSession, sf: str) -> DataFrame:
     withh = d.select("doc_id", html.alias("__h"))
     return withh.select(
         "doc_id",
-        textfn.extract_html_text("__h").alias("extracted"),
+        text.extract_html_text("__h").alias("extracted"),
         F.regexp_count("__h", F.lit("<[^>]+>")).cast("long").alias("n_tags"),
         F.col("__h").contains("<a href").alias("has_link"),
     )
@@ -2850,17 +2733,6 @@ def st06_streaming_upsert(spark: SparkSession, sf: str) -> DataFrame:
     state table (latest event per user) must equal the batch
     latest-per-user, which the DuckDB twin computes directly — the gate
     certifies the streaming MERGE path end-to-end."""
-    import tempfile  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.streaming.events import read_events_stream  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.streaming.upsert_sink import (  # noqa: PLC0415
-        read_current_snapshot,
-        run_streaming_upsert,
-    )
-
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-
     # fixed scratch path + pre-clean (also wipes the stream checkpoint —
     # a stale one would skip the replayed input as already-processed)
     root = scratch_path("st06_upsert")
@@ -3071,14 +2943,6 @@ def st07_streaming_sessions(spark: SparkSession, sf: str) -> DataFrame:
     delta >= 1800, not > 1800; that boundary semantic is exactly what
     the hash certifies (w03's batch sessionize uses the > convention,
     which is why it is a separate query)."""
-    import uuid  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.streaming.events import (  # noqa: PLC0415
-        read_events_stream,
-        run_to_memory,
-        streaming_session_agg,
-    )
-
     name = "st07_" + uuid.uuid4().hex[:8]
     stream = read_events_stream(spark, sf)
     agg = streaming_session_agg(stream, gap="30 minutes", watermark="2 hours")
@@ -3135,11 +2999,6 @@ def st05_stream_stream_join(spark: SparkSession, sf: str) -> DataFrame:
     bound keep join state bounded. Driven to completion over the static
     parquet; the oracle is the batch inner interval join, so the
     streaming join must reproduce it exactly."""
-    from pyp_etl_pipeline_spark.streaming.events import (  # noqa: PLC0415
-        read_events_stream,
-        streaming_window_join,
-    )
-
     name = "st05_out_" + uuid.uuid4().hex[:8]
     errors = (
         read_events_stream(spark, sf)
@@ -3188,12 +3047,6 @@ def st08_stream_static_enrich(spark: SparkSession, sf: str) -> DataFrame:
     the plain batch join+rollup, so the per-batch broadcast-join path
     must reproduce batch semantics exactly. Completes the streaming
     join matrix: st05 covers stream-stream, this covers stream-static."""
-    from pyp_etl_pipeline_spark.functions import aggregates  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.streaming.events import (  # noqa: PLC0415
-        read_events_stream,
-        streaming_static_enrich,
-    )
-
     name = "st08_out_" + uuid.uuid4().hex[:8]
     dim = load_table(spark, sf, "customer").select("c_custkey", "c_mktsegment")
     enriched = streaming_static_enrich(read_events_stream(spark, sf), dim)
@@ -3223,8 +3076,6 @@ def zo01_zorder_cells(spark: SparkSession, sf: str) -> DataFrame:
     once, so file-level min/max statistics prune 2-D range predicates
     (the Delta/Iceberg Z-ORDER move; here the key is pure integer bit
     algebra, certified bit-for-bit by the twin)."""
-    from pyp_etl_pipeline_spark.operators import export  # noqa: PLC0415
-
     # zvalue's documented domain is NON-NEGATIVE dimensions; refund/
     # credit orders (negative totals — the --negatives class) clamp to
     # bucket 0 so they cluster with the smallest prices instead of
@@ -3248,8 +3099,6 @@ def zo01_zorder_cells(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _zo01_sql() -> str:
-    from pyp_etl_pipeline_spark.operators.export import sql_zvalue  # noqa: PLC0415
-
     zv = sql_zvalue("o_custkey", "pb", bits=12)
     return f"""
 WITH o AS (SELECT o_custkey,
@@ -3273,9 +3122,7 @@ def cms01_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
     carries both the exact and sketched counts, certifying the
     CMS >= exact overestimate contract on real data. Scale story:
     sketch state is depth x width counters however large the corpus."""
-    from pyp_etl_pipeline_spark.operators import sketch  # noqa: PLC0415
-
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     toks = d.select(
         F.explode(F.split(dedup.normalized_text("text"), " ")).alias("tok")
     ).filter(F.col("tok") != "")
@@ -3329,10 +3176,7 @@ def w09_ewma_value(spark: SparkSession, sf: str) -> DataFrame:
     The twin replays it with DuckDB's list_reduce over the identically
     ordered value list — order rule, tie rule, and every halving step
     hash-certified."""
-    from pyp_etl_pipeline_spark.operators import windows as win  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.tables import load_events  # noqa: PLC0415
-
-    return win.ewma_by_key(load_events(spark, sf))
+    return windows.ewma_by_key(load_events(spark, sf))
 
 
 # NOTE the halving step: the engine is F.floor((acc+x)/2) — TRUE floor
@@ -3361,8 +3205,6 @@ def a13_hll_distinct(spark: SparkSession, sf: str) -> DataFrame:
     The exact distinct rides along for the error column. The scale
     story: per-group state is 256 integers regardless of input size —
     no distinct shuffle."""
-    from pyp_etl_pipeline_spark.operators import sketch  # noqa: PLC0415
-
     o = load_table(spark, sf, "orders").select("o_orderpriority", "o_custkey")
     est = sketch.hll_distinct(o, "o_custkey", group_cols=("o_orderpriority",))
     exact = o.groupBy("o_orderpriority").agg(
@@ -3374,8 +3216,6 @@ def a13_hll_distinct(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _a13_sql() -> str:
-    from pyp_etl_pipeline_spark.operators.sketch import sql_hll_distinct  # noqa: PLC0415
-
     hll = sql_hll_distinct("orders", "o_custkey", group_cols=("o_orderpriority",))
     return f"""
 WITH hll AS ({hll}),
@@ -3398,9 +3238,7 @@ def tk01_bpe_vocab(spark: SparkSession, sf: str) -> DataFrame:
     (count desc, pair asc) argmax, and the left-to-right non-overlapping
     rewrite via recursive CTEs — so the entire iterative training loop
     is hash-certified bit-for-bit, not just sampled."""
-    from pyp_etl_pipeline_spark.operators import bpe  # noqa: PLC0415
-
-    words = bpe.word_counts(_load_corpus(spark, sf, "documents"))
+    words = bpe.word_counts(load_corpus(spark, sf, "documents"))
     _merges, seqs = bpe.bpe_fit(words, n_merges=10)
     return seqs.select(
         "word",
@@ -3458,8 +3296,6 @@ def gr01_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     scoring for corpus/link quality weighting. All rank arithmetic is
     integer DIV on a fixed mass pool, so the twin (the same two
     iterations unrolled as CTEs) reproduces every rank bit-for-bit."""
-    from pyp_etl_pipeline_spark.operators import graph  # noqa: PLC0415
-
     li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_suppkey")
     o = load_table(spark, sf, "orders").select("o_orderkey", "o_custkey")
     pairs = (
@@ -3638,22 +3474,27 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
 }
 
 # part 3: validators, text T4/T6, limits, summaries, set ops, date funcs,
-# streaming sliding, multimodal plumbing
-from pyp_etl_pipeline_spark import driver_queries_ext3 as _ext3  # noqa: E402
+# streaming sliding, multimodal plumbing; part 4: embedding
+# quantization/geometry, feature hashing, padding economics, vocab
+# sizing, TPC-H Q22 anti-join shape (round-8 cont.)
+REGISTRY.update(ext3.QUERIES3)
+REGISTRY.update(ext4.QUERIES4)
 
-# _ext3._finalize() composes the cross-module oracles (a03/ev01/pp02).
-# When ext3 is imported FIRST, its own bottom _finalize() call is still
-# on the stack while THIS module executes — so its patches would land
-# after our REGISTRY snapshot. Re-running it here (idempotent) before
-# the update makes the registry correct under either import order.
-_ext3._finalize()
-REGISTRY.update(_ext3.QUERIES3)
-
-# part 4: embedding quantization/geometry, feature hashing, padding
-# economics, vocab sizing, TPC-H Q22 anti-join shape (round-8 cont.)
-from pyp_etl_pipeline_spark import driver_queries_ext4 as _ext4  # noqa: E402
-
-REGISTRY.update(_ext4.QUERIES4)
+# part-3 queries whose twins compose part-2 twins: built here, because
+# part 3 sits below this module in the import graph
+REGISTRY.update(
+    {
+        "ks01_keep_best_per_cluster": (ext3.ks01_keep_best_per_cluster, ext3._ks01_sql(DD04_SQL)),
+        "ev01_linkage_eval": (ext3.ev01_linkage_eval, ext3._ev01_sql(SH01_SQL, DD02_SQL)),
+        "pp02_multimodal_curation": (ext3.pp02_multimodal_curation, ext3._pp02_sql(TX07_SQL)),
+        "ev04_gate_calibration": (ext3.ev04_gate_calibration, ext3._ev04_sql(TX07_SQL)),
+        "ev05_gate_kappa": (ext3.ev05_gate_kappa, ext3._ev05_sql(TX07_SQL, TX11_SQL)),
+        "ev06_quality_auc": (ext3.ev06_quality_auc, ext3._ev06_sql(TX07_SQL)),
+        "cf01_cascade_filter": (ext3.cf01_cascade_filter, ext3._cf01_sql(TX07_SQL)),
+        "dd08_dedup_savings": (ext3.dd08_dedup_savings, ext3._dd08_sql(DD04_SQL)),
+        "gr02_star_components": (ext3.gr02_star_components, DD04_SQL),
+    }
+)
 
 # The driver's correctness gate only covers the first 50 registry
 # entries; this list sets that window per round (changed-code re-certs
@@ -3662,37 +3503,26 @@ REGISTRY.update(_ext4.QUERIES4)
 # insertion keeps the FIRST occurrence's position.
 _DRIVER_PRIORITY = [
     # generated by tools/rotate_window.py (paste, don't hand-edit; the
-    # uniqueness/resolvability test pins the invariants). Head: 25
-    # changed-code re-certs — mm01-mm22 (every per-row media operator now
-    # runs on multimodal/rowmap), xl01/xl02 (read_excel_distributed's
-    # worker functions) and pp02 (consumes mm10). Backfill: the r9 tier
+    # uniqueness/resolvability test pins the invariants). Head: 14
+    # changed-code re-certs — the ten twins now composed by this module
+    # (a03, ks01, ev01, pp02, ev04-ev06, cf01, dd08, gr02) and the four r14
+    # dedup changes (dd09, dd05, dd04, sd01). Backfill: the r9 tier
     # stalest-first.
-    # proposed window (50 slots): 25 changed + 0 red-latest + 0 new + 25 stalest-first backfill
-    "mm01_media_features",  # evidence r10
-    "mm02_media_decode",  # evidence r11
-    "mm03_jpeg_decode",  # evidence r11
-    "mm04_frame_sample_plan",  # evidence r9
-    "mm05_mp4_metadata",  # evidence r11
-    "mm06_audio_features",  # evidence r11
-    "mm07_mjpeg_frames",  # evidence r12
-    "mm08_hadamard_spectrum",  # evidence r12
-    "mm09_image_dhash",  # evidence r12
-    "mm10_image_neardup_pairs",  # evidence r12
-    "mm11_audio_fingerprint_groups",  # evidence r12
-    "mm12_gif_decode",  # evidence r14
-    "mm13_gif_animation_frames",  # evidence r14
-    "mm14_resized_thumbs",  # evidence r14
-    "mm15_h264_sps_metadata",  # evidence r12
-    "mm16_mp4_avcc_qa",  # evidence r12
-    "mm17_hevc_sps_metadata",  # evidence r12
-    "mm18_mp4_hvcc_qa",  # evidence r12
-    "mm19_av1_seq_metadata",  # evidence r12
-    "mm20_mp4_av1c_qa",  # evidence r12
-    "mm21_vp9_frame_metadata",  # evidence r14
-    "mm22_mp4_vpcc_qa",  # evidence r14
-    "xl01_xlsx_roundtrip",  # evidence r14
-    "xl02_xlsx_sidecar_roundtrip",  # evidence r14
+    # proposed window (50 slots): 14 changed + 0 red-latest + 0 new + 36 stalest-first backfill
+    "a03_push_summary",  # evidence r14
+    "ks01_keep_best_per_cluster",  # evidence r9
+    "ev01_linkage_eval",  # evidence r12
     "pp02_multimodal_curation",  # evidence r12
+    "ev04_gate_calibration",  # evidence r14
+    "ev05_gate_kappa",  # evidence r14
+    "ev06_quality_auc",  # evidence r14
+    "cf01_cascade_filter",  # evidence r14
+    "dd08_dedup_savings",  # evidence r14
+    "gr02_star_components",  # evidence r14
+    "dd09_containment_pairs",  # evidence r10
+    "dd05_incremental_minhash",  # evidence r11
+    "dd04_dup_clusters",  # evidence r11
+    "sd01_semantic_dedup",  # evidence r11
     "a10_length_histogram",  # evidence r9
     "ab01_ab_test_readout",  # evidence r9
     "ann08_int8_topk",  # evidence r9
@@ -3710,7 +3540,7 @@ _DRIVER_PRIORITY = [
     "fm01_orc_roundtrip",  # evidence r9
     "hh01_threshold_heavy_hitters",  # evidence r9
     "ka02_l_diversity",  # evidence r9
-    "ks01_keep_best_per_cluster",  # evidence r9
+    "mm04_frame_sample_plan",  # evidence r9
     "o01_topk_orders_per_customer",  # evidence r9
     "o04_latest_order_per_customer",  # evidence r9
     "o07_distinct_sorted_filters",  # evidence r9
@@ -3718,25 +3548,24 @@ _DRIVER_PRIORITY = [
     "pt01_partition_pruned_rollup",  # evidence r9
     "q09_priority_with_returns",  # evidence r9
     "q10_returned_revenue_topk",  # evidence r9
+    "se01_schema_evolution",  # evidence r9
+    "sh01_simhash_pairs",  # evidence r9
+    "sp01_hash_split",  # evidence r9
+    "st10_streaming_materialized_rollup",  # evidence r9
+    "t03_punct_lower_key",  # evidence r9
+    "t09_masking",  # evidence r9
+    "tx01_quality_features",  # evidence r9
+    "tx02_token_counts",  # evidence r9
+    "tx03_language_id",  # evidence r9
+    "tx04_fingerprints",  # evidence r9
+    "tx05_repetition",  # evidence r9
     # ---- end of the 50-slot driver window ----
-    "se01_schema_evolution",
-    "sh01_simhash_pairs",
-    "sp01_hash_split",
-    "st10_streaming_materialized_rollup",
-    "t03_punct_lower_key",
-    "t09_masking",
-    "tx01_quality_features",
-    "tx02_token_counts",
-    "tx03_language_id",
-    "tx04_fingerprints",
-    "tx05_repetition",
     "tx06_unigram_logprob",
     "tx19_token_entropy",
     "a08_percentile_summary",
     "a12_cohort_retention",
     "aj01_asof_purchase_view",
     "aj02_asof_directions",
-    "dd09_containment_pairs",
     "dr01_psi_drift",
     "e01_explode_multivalue",
     "e02_explode_dedup",
@@ -3757,6 +3586,7 @@ _DRIVER_PRIORITY = [
     "j12_canonical_backfill",
     "j13_reject_payload",
     "ml01_linear_trend",
+    "mm01_media_features",
     "q01_pricing_summary",
     "q02_top_revenue_orders",
     "q03_region_revenue",
@@ -3787,8 +3617,6 @@ _DRIVER_PRIORITY = [
     "ann04_kmeans_clusters",
     "dc02_decontaminate_spans",
     "dd03_minhash_lsh_pairs",
-    "dd04_dup_clusters",
-    "dd05_incremental_minhash",
     "dd06_span_dedup",
     "dd07_neardup_dedup",
     "ex01_shard_stats",
@@ -3796,13 +3624,16 @@ _DRIVER_PRIORITY = [
     "j15_live_uid_fallback",
     "j16_point_in_time_status",
     "js01_json_extract_rollup",
+    "mm02_media_decode",
+    "mm03_jpeg_decode",
+    "mm05_mp4_metadata",
+    "mm06_audio_features",
     "mx01_corpus_mixture",
     "nd01_embed_neardup",
     "pp01_pretraining_pipeline",
     "px01_pii_scrub",
     "px02_pseudonymization",
     "qa01_daily_quota_ledger",
-    "sd01_semantic_dedup",
     "sk01_salted_join",
     "st01_streaming_tumbling",
     "st03_stateful_running_totals",
@@ -3836,11 +3667,21 @@ _DRIVER_PRIORITY = [
     "dd02_ngram_jaccard_pairs",
     "dq01_expectation_report",
     "ep01_epoch_shuffle",
-    "ev01_linkage_eval",
     "gf01_gap_fill",
     "gt01_grand_total_wide",
     "ia01_incremental_rollup",
     "ii01_inverted_index",
+    "mm07_mjpeg_frames",
+    "mm08_hadamard_spectrum",
+    "mm09_image_dhash",
+    "mm10_image_neardup_pairs",
+    "mm11_audio_fingerprint_groups",
+    "mm15_h264_sps_metadata",
+    "mm16_mp4_avcc_qa",
+    "mm17_hevc_sps_metadata",
+    "mm18_mp4_hvcc_qa",
+    "mm19_av1_seq_metadata",
+    "mm20_mp4_av1c_qa",
     "o08_keyset_pagination",
     "pf01_table_profile",
     "q06_large_volume_customers",
@@ -3857,7 +3698,6 @@ _DRIVER_PRIORITY = [
     "u06_multiset_ops",
     "w05_ntile_quartiles",
     "a02_member_rollup",
-    "a03_push_summary",
     "a05_error_summary_24h",
     "a07_status_priority_rollup",
     "ann05_pq_topk",
@@ -3865,22 +3705,21 @@ _DRIVER_PRIORITY = [
     "ann07_ivfpq_refine_topk",
     "bfs01_reach_levels",
     "br01_boolean_retrieval",
-    "cf01_cascade_filter",
     "cu01_curriculum_schedule",
     "dc03_semantic_decontaminate",
-    "dd08_dedup_savings",
     "ev02_ann_recall",
-    "ev04_gate_calibration",
-    "ev05_gate_kappa",
-    "ev06_quality_auc",
     "fh01_feature_hashing",
     "gr01_pagerank",
-    "gr02_star_components",
     "gs01_grouping_sets",
     "hn01_hard_negatives",
     "im01_class_weight_plan",
     "ka01_k_anonymity",
     "mk01_mlm_masking_plan",
+    "mm12_gif_decode",
+    "mm13_gif_animation_frames",
+    "mm14_resized_thumbs",
+    "mm21_vp9_frame_metadata",
+    "mm22_mp4_vpcc_qa",
     "mx02_token_budget_fill",
     "mx03_temperature_mixture",
     "pb01_padding_efficiency",
@@ -3899,7 +3738,9 @@ _DRIVER_PRIORITY = [
     "w06_group_zscores",
     "ws01_weighted_sample",
     "wz01_winsorized_stats",
-    # tail: 180 queries; oldest deferred evidence tier: r9 (13 queries)
+    "xl01_xlsx_roundtrip",
+    "xl02_xlsx_sidecar_roundtrip",
+    # tail: 180 queries; oldest deferred evidence tier: r9 (2 queries)
 ]
 
 REGISTRY = {

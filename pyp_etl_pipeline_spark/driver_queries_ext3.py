@@ -14,14 +14,89 @@ the greedy/iterative ones exactly replayable).
 
 from __future__ import annotations
 
+import os
+import shutil
+import time
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
-from pyp_etl_pipeline_spark.functions import text, validation
-from pyp_etl_pipeline_spark.functions.aggregates import exact_avg as _exact_avg
-from pyp_etl_pipeline_spark.functions.aggregates import exact_sum as _exact_sum
+from pyp_etl_pipeline_spark.driver_queries import (
+    J09_SQL,
+    j09_merge_actions,
+    sql_normalized_text,
+    sql_shingles,
+)
+from pyp_etl_pipeline_spark.functions import masking, text, validation
+from pyp_etl_pipeline_spark.functions.aggregates import (
+    _sql_micro,
+    exact_avg,
+    exact_sum,
+    micro_col,
+    sql_exact_avg,
+    sql_exact_sum,
+    sql_finalize_avg,
+    sql_finalize_sum,
+)
+from pyp_etl_pipeline_spark.functions.masking import PII_PATTERNS
+from pyp_etl_pipeline_spark.multimodal.binary_ops import (
+    decode_features,
+    dhash_features,
+    extract_features,
+    frame_sample_decoded,
+    gif_frame_stats,
+    gif_pixel_stats,
+    hadamard_spectrum,
+    png_pixel_stats,
+    resize_images,
+    sample_frames_decoded,
+)
+from pyp_etl_pipeline_spark.multimodal.codecs import (
+    avi_mjpeg_encode,
+    gif_encode_gray_animation,
+    gif_encode_gray_pixels,
+    jpeg_encode_gray,
+    mp4_encode,
+    png_encode_gray,
+    png_encode_gray_pixels,
+    wav_encode_pcm16,
+)
 from pyp_etl_pipeline_spark.multimodal.rowmap import synth_media
-from pyp_etl_pipeline_spark.tables import load_table
+from pyp_etl_pipeline_spark.operators import (
+    bpe,
+    dedup,
+    graph,
+    incremental,
+    packing,
+    quality,
+    sampling,
+    similarity,
+    sketch,
+    skew,
+    textan,
+    windows,
+)
+from pyp_etl_pipeline_spark.operators.asof import asof_join
+from pyp_etl_pipeline_spark.operators.dedup import word_shingles
+from pyp_etl_pipeline_spark.operators.export import plan_compaction
+from pyp_etl_pipeline_spark.operators.graph import triangle_stats
+from pyp_etl_pipeline_spark.operators.quality import profile_table
+from pyp_etl_pipeline_spark.operators.sampling import BUCKETS, epoch_shuffle, sql_hash_bucket
+from pyp_etl_pipeline_spark.operators.sketch import sql_h48, sql_hll_distinct
+from pyp_etl_pipeline_spark.plans.header_map import map_headers_to_schema
+from pyp_etl_pipeline_spark.schema import MEMBER_SCHEMA_FIELDS
+from pyp_etl_pipeline_spark.sources.bucketed import read_partition_pruned, write_date_partitioned
+from pyp_etl_pipeline_spark.streaming import stateful
+from pyp_etl_pipeline_spark.streaming.events import (
+    read_events_stream,
+    run_to_memory,
+    streaming_dedup,
+    streaming_sliding_agg,
+    streaming_window_join,
+)
+from pyp_etl_pipeline_spark.tables import load_corpus, load_corpus_unique, load_table, scratch_path
 
 # --------------------------------------------------------------------------
 # F3/F4 name + email validation
@@ -117,11 +192,8 @@ GROUP BY n.n_name
 """
 
 
-from pyp_etl_pipeline_spark.driver_queries import sql_exact_avg as _sea
-from pyp_etl_pipeline_spark.driver_queries import sql_exact_sum as _ses  # noqa: E402
-
 _Q05_TEXT = _Q05_TEXT_TMPL.replace(
-    "{revenue_sum}", _ses("l.l_extendedprice * (1 - l.l_discount)")
+    "{revenue_sum}", sql_exact_sum("l.l_extendedprice * (1 - l.l_discount)")
 )
 
 
@@ -129,8 +201,6 @@ def q05_sql_interface(spark: SparkSession, sf: str) -> DataFrame:
     """The engine's SQL-text entry point: tables registered as temp views,
     query authored in SQL and planned by Catalyst exactly like the
     DataFrame API (same optimizations, same physical strategies)."""
-    import uuid  # noqa: PLC0415
-
     tag = uuid.uuid4().hex[:8]
     names = {}
     for alias, t in [("li", "lineitem"), ("ord", "orders"), ("cust", "customer"), ("nat", "nation")]:
@@ -208,9 +278,10 @@ SELECT * FROM (
 def a03_push_summary(spark: SparkSession, sf: str) -> DataFrame:
     """A3: members created/updated/skipped counts from the merge
     classification (reference app/routes.py:2019-2028)."""
-    from pyp_etl_pipeline_spark.driver_queries import j09_merge_actions  # noqa: PLC0415
-
     return j09_merge_actions(spark, sf).groupBy("action").agg(F.count("*").alias("n_members"))
+
+
+A03_SQL = f"SELECT action, count(*) AS n_members FROM ({J09_SQL}) GROUP BY 1"
 
 
 def a05_error_summary_24h(spark: SparkSession, sf: str) -> DataFrame:
@@ -231,7 +302,7 @@ def a05_error_summary_24h(spark: SparkSession, sf: str) -> DataFrame:
         )
         .agg(
             F.count("*").alias("n_errors"),
-            _exact_avg("value").alias("avg_value"),
+            exact_avg("value").alias("avg_value"),
         )
     )
 
@@ -239,7 +310,7 @@ def a05_error_summary_24h(spark: SparkSession, sf: str) -> DataFrame:
 A05_SQL = f"""
 WITH cut AS (SELECT max(ts) - INTERVAL 24 HOURS AS c FROM events)
 SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day, event_type AS category,
-       count(*) AS n_errors, {_sea("value")} AS avg_value
+       count(*) AS n_errors, {sql_exact_avg("value")} AS avg_value
 FROM events, cut WHERE ts >= cut.c
 GROUP BY 1, 2
 """
@@ -317,10 +388,7 @@ FROM allp a LEFT JOIN linked l ON a.l_orderkey = l.l_orderkey
 def ann03_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
     """IVF-flat ANN: corpus bucketed by nearest of 16 deterministic
     centroids; queries probe their 2 nearest lists and exact-rerank."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.operators import similarity  # noqa: PLC0415
-
-    emb = _load_corpus(spark, sf, "embeddings")
+    emb = load_corpus(spark, sf, "embeddings")
     q = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -374,14 +442,6 @@ def st04_streaming_dedup(spark: SparkSession, sf: str) -> DataFrame:
     dropped against retained state; behind it -> dropped as late. The
     cross-micro-batch case is pinned by
     tests/test_streaming.py::test_streaming_dedup_across_microbatches."""
-    import uuid  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.streaming.events import (  # noqa: PLC0415
-        read_events_stream,
-        run_to_memory,
-        streaming_dedup,
-    )
-
     name = "st04_" + uuid.uuid4().hex[:8]
     stream = read_events_stream(spark, sf)
     doubled = stream.unionByName(read_events_stream(spark, sf))
@@ -417,14 +477,6 @@ def st02_streaming_sliding(spark: SparkSession, sf: str) -> DataFrame:
     """Structured Streaming sliding-window counts, drained with
     availableNow semantics and emitted as epoch window starts so the
     DuckDB twin (same arithmetic as w02) verifies the stream output."""
-    from pyp_etl_pipeline_spark.streaming.events import (  # noqa: PLC0415
-        read_events_stream,
-        run_to_memory,
-        streaming_sliding_agg,
-    )
-
-    import uuid  # noqa: PLC0415
-
     name = "st02_" + uuid.uuid4().hex[:8]
     stream = read_events_stream(spark, sf)
     agg = streaming_sliding_agg(stream, watermark="0 seconds")
@@ -460,13 +512,13 @@ def a07_status_priority_rollup(spark: SparkSession, sf: str) -> DataFrame:
     o = load_table(spark, sf, "orders")
     return (
         o.rollup("o_orderstatus", "o_orderpriority")
-        .agg(F.count("*").alias("n_orders"), _exact_sum("o_totalprice").alias("total_price"))
+        .agg(F.count("*").alias("n_orders"), exact_sum("o_totalprice").alias("total_price"))
     )
 
 
 A07_SQL = f"""
 SELECT o_orderstatus, o_orderpriority, count(*) AS n_orders,
-       {_ses("o_totalprice")} AS total_price
+       {sql_exact_sum("o_totalprice")} AS total_price
 FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
 """
 
@@ -479,17 +531,15 @@ def w04_lag_delta(spark: SparkSession, sf: str) -> DataFrame:
     """Per-user event-over-event value delta plus a running sum — the
     analytic-window surface (lag/lead/cumulative) the reference never had
     but Spark SQL provides natively (SURVEY §2.10)."""
-    from pyspark.sql import Window as W  # noqa: PLC0415
-
     e = load_table(spark, sf, "events").withColumn("ts_sec", F.col("ts").cast("long"))
-    w = W.partitionBy("user_id").orderBy(F.col("ts_sec").asc(), F.col("event_id").asc())
+    w = Window.partitionBy("user_id").orderBy(F.col("ts_sec").asc(), F.col("event_id").asc())
     return e.select(
         "user_id",
         "event_id",
         "ts_sec",
         F.round("value", 2).alias("value"),
         F.round(F.col("value") - F.lag("value").over(w), 2).alias("delta_prev"),
-        F.round(F.sum("value").over(w.rowsBetween(W.unboundedPreceding, 0)), 2).alias("running_sum"),
+        F.round(F.sum("value").over(w.rowsBetween(Window.unboundedPreceding, 0)), 2).alias("running_sum"),
     )
 
 
@@ -540,8 +590,6 @@ def aj01_asof_purchase_view(spark: SparkSession, sf: str) -> DataFrame:
     whole seconds (portable across the engines' nanos/micros precision)
     and the view side pre-aggregated to one row per (user, second) so
     the 'latest prior' pick is deterministic."""
-    from pyp_etl_pipeline_spark.operators.asof import asof_join  # noqa: PLC0415
-
     e = load_table(spark, sf, "events").withColumn("ts_sec", F.col("ts").cast("long"))
     purchases = e.filter(F.col("event_type") == "purchase").select(
         "user_id", "event_id", F.col("ts_sec").alias("ts"), F.round("value", 2).alias("purchase_value")
@@ -580,14 +628,6 @@ def st03_stateful_running_totals(spark: SparkSession, sf: str) -> DataFrame:
     """Per-user running totals via the custom GroupState operator, drained
     over all available input; the FINAL state per user (max n_events row)
     must equal the batch aggregate — which is the DuckDB oracle."""
-    import uuid  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.streaming import stateful  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.streaming.events import (  # noqa: PLC0415
-        read_events_stream,
-        run_to_memory,
-    )
-
     name = "st03_" + uuid.uuid4().hex[:8]
     stream = read_events_stream(spark, sf).select("user_id", "value")
     out = stateful.running_user_totals(stream)
@@ -605,7 +645,7 @@ def st03_stateful_running_totals(spark: SparkSession, sf: str) -> DataFrame:
 
 
 ST03_SQL = f"""
-SELECT user_id, count(*) AS n_events, {_ses("value")} AS sum_value,
+SELECT user_id, count(*) AS n_events, {sql_exact_sum("value")} AS sum_value,
        round(max(value), 6) AS max_value
 FROM events GROUP BY 1
 """
@@ -624,8 +664,6 @@ def mm01_media_features(spark: SparkSession, sf: str) -> DataFrame:
     mapInPandas. The DuckDB twin reproduces every stat from the text via
     hex-pair byte walking (byte arithmetic, never char arithmetic);
     plumbing values are additionally golden-tested in pytest."""
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import extract_features  # noqa: PLC0415
-
     d = load_table(spark, sf, "documents")
     kinds = F.array(F.lit("image"), F.lit("audio"), F.lit("video"))
     media = d.select(
@@ -670,12 +708,6 @@ def mm02_media_decode(spark: SparkSession, sf: str) -> DataFrame:
     twin computes every feature analytically from doc_id, so a decoder
     bug (wrong stride, wrong endianness, off-by-one scanline) breaks the
     hash match."""
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import decode_features  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.multimodal.codecs import (  # noqa: PLC0415
-        png_encode_gray,
-        wav_encode_pcm16,
-    )
-
     def png_or_clip(i: int) -> bytes:
         if i % 2 == 0:
             return png_encode_gray(1 + i % 16, 1 + i % 8, i % 256)
@@ -720,9 +752,6 @@ def mm03_jpeg_decode(spark: SparkSession, sf: str) -> DataFrame:
     analytically from doc_id, so a marker-walk or entropy-decoder bug
     (wrong dims, wrong category extend, bad byte unstuffing) breaks the
     hash match."""
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import decode_features  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.multimodal.codecs import jpeg_encode_gray  # noqa: PLC0415
-
     d = load_table(spark, sf, "documents").select("doc_id")
     media = synth_media(d, lambda i: jpeg_encode_gray(1 + i % 24, 1 + i % 12, i % 256))
     out = decode_features(media)
@@ -754,9 +783,6 @@ def mm04_frame_sample_plan(spark: SparkSession, sf: str) -> DataFrame:
     timestamp at a 1s cadence. The DuckDB twin reproduces the frame grid
     arithmetically, so an encoder/box-walk disagreement (wrong timescale
     math, fixed-point dims misread, truncated box) breaks the match."""
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import frame_sample_decoded  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.multimodal.codecs import mp4_encode  # noqa: PLC0415
-
     # a doc with unknown length has no synthesizable duration (and NULL
     # n_chars would reach int() inside the Arrow batch) — both sides
     # restrict the plan to docs with a known length
@@ -789,9 +815,6 @@ def mm05_mp4_metadata(spark: SparkSession, sf: str) -> DataFrame:
     DuckDB twin computes every value analytically from doc_id, so any
     box-walk bug (offset drift, wrong version layout, fixed-point
     misread) breaks the hash match."""
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import decode_features  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.multimodal.codecs import mp4_encode  # noqa: PLC0415
-
     d = load_table(spark, sf, "documents").select("doc_id")
     media = synth_media(d, lambda i: mp4_encode(16 + i % 1904, 16 + i % 1064, 1 + i % 600000))
     return decode_features(media).select(
@@ -826,12 +849,7 @@ def mx02_token_budget_fill(spark: SparkSession, sf: str) -> DataFrame:
     so no bounds pass). The twin replays hash order, tie rule, window
     cumsum, and the overflow contract, so the whole budget-fill chain is
     hash-certified."""
-    from pyp_etl_pipeline_spark.operators import sampling, textan  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus_unique  # noqa: PLC0415
-
-    d = _load_corpus_unique(spark, sf, "documents")
+    d = load_corpus_unique(spark, sf, "documents")
     src = d.select(
         "doc_id",
         F.element_at(
@@ -846,8 +864,6 @@ def mx02_token_budget_fill(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _mx02_sql() -> str:
-    from pyp_etl_pipeline_spark.operators.sampling import sql_hash_bucket  # noqa: PLC0415
-
     toks = "list_filter(string_split_regex(trim(text), '\\s+'), w -> w <> '')"
     names = ", ".join(f"'{n}'" for n in _MX02_SOURCES)
     return f"""
@@ -886,9 +902,6 @@ def mm07_mjpeg_frames(spark: SparkSession, sf: str) -> DataFrame:
     frame-indexing, or JPEG-decode bug breaks the hash. This closes the
     round-6 'video decode is a stub' gap for intra-frame video; only
     inter-frame codecs (H.264 etc.) still require libav."""
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import sample_frames_decoded  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.multimodal.codecs import avi_mjpeg_encode  # noqa: PLC0415
-
     def clip(i: int) -> bytes:
         fills = [(i * 31 + j * 17) % 256 for j in range(1 + i % 6)]
         return avi_mjpeg_encode(1 + i % 16, 1 + i % 8, fills, fps=4)
@@ -927,16 +940,12 @@ def sp01_hash_split(spark: SparkSession, sf: str) -> DataFrame:
     """Deterministic train/val/test split of the documents corpus keyed
     on doc_id (map-only md5-bucket routing, stable across runs and
     engines — the oracle reproduces every assignment bit-for-bit)."""
-    from pyp_etl_pipeline_spark.operators import sampling  # noqa: PLC0415
-
     d = load_table(spark, sf, "documents")
     out = sampling.hash_split(d, "doc_id", {"train": 0.9, "val": 0.05, "test": 0.05})
     return out.select("doc_id", "split")
 
 
 def _sp01_sql() -> str:
-    from pyp_etl_pipeline_spark.operators.sampling import BUCKETS, sql_hash_bucket  # noqa: PLC0415
-
     b = sql_hash_bucket("doc_id", "split-v1")
     return f"""
 SELECT doc_id,
@@ -961,8 +970,6 @@ def mx01_corpus_mixture(spark: SparkSession, sf: str) -> DataFrame:
     floor(rate) guaranteed copies per doc + a keyed-hash extra for the
     fractional part; the oracle reproduces every copy decision
     bit-for-bit."""
-    from pyp_etl_pipeline_spark.operators import sampling  # noqa: PLC0415
-
     d = load_table(spark, sf, "documents")
     sources = [
         (name, d.filter(F.col("doc_id") % 3 == m).select("doc_id"), rate)
@@ -973,8 +980,6 @@ def mx01_corpus_mixture(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _mx01_sql() -> str:
-    from pyp_etl_pipeline_spark.operators.sampling import BUCKETS, sql_hash_bucket  # noqa: PLC0415
-
     branches = []
     for name, m, rate in MIX_RATES:
         whole = int(rate)
@@ -1005,8 +1010,6 @@ def px01_pii_scrub(spark: SparkSession, sf: str) -> DataFrame:
     identical engine-portable patterns in the identical order, so any
     dialect drift (greediness, anchor semantics, replace-all behavior)
     breaks the hash match."""
-    from pyp_etl_pipeline_spark.functions import masking  # noqa: PLC0415
-
     d = load_table(spark, sf, "documents")
     k = F.col("doc_id")
     injected = F.concat(
@@ -1025,8 +1028,6 @@ def px01_pii_scrub(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _px01_sql() -> str:
-    from pyp_etl_pipeline_spark.functions.masking import PII_PATTERNS  # noqa: PLC0415
-
     inj = (
         "text || CASE WHEN doc_id % 4 = 0 THEN ' contact user' || doc_id || '@example.com now' "
         "WHEN doc_id % 4 = 1 THEN ' call (555) 123-' || lpad((doc_id % 10000)::VARCHAR, 4, '0') "
@@ -1059,8 +1060,6 @@ def pk01_sequence_packing(spark: SparkSession, sf: str) -> DataFrame:
     offsets — no single-partition global window); the DuckDB twin runs
     the sequential single-node cumsum, so the gate proves the
     distributed scan reproduces sequential packing bit-for-bit."""
-    from pyp_etl_pipeline_spark.operators import packing  # noqa: PLC0415
-
     d = load_table(spark, sf, "documents").distinct()
     return packing.pack_sequences(d, max_len=512)
 
@@ -1094,8 +1093,6 @@ def sp02_stratified_sample(spark: SparkSession, sf: str) -> DataFrame:
     """Exactly-25-per-event-type stratified sample of events, chosen by
     hash order (deterministic, unbiased within the stratum); plus the
     keyed 10%% deterministic sample as a flag column."""
-    from pyp_etl_pipeline_spark.operators import sampling  # noqa: PLC0415
-
     e = load_table(spark, sf, "events")
     sampled = sampling.stratified_fixed_n(e, "event_type", "event_id", n=25)
     return sampled.select(
@@ -1108,8 +1105,6 @@ def sp02_stratified_sample(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _sp02_sql() -> str:
-    from pyp_etl_pipeline_spark.operators.sampling import BUCKETS, sql_hash_bucket  # noqa: PLC0415
-
     return f"""
 SELECT event_type, event_id,
        {sql_hash_bucket("event_id", "sample-v1")} < {int(0.1 * BUCKETS)} AS in_10pct_sample
@@ -1134,8 +1129,6 @@ def t09_masking(spark: SparkSession, sf: str) -> DataFrame:
     chars embedded in ordinary strings are masked in place; short strings
     and non-string columns pass through (reference
     app/logging_utils.py:38-56)."""
-    from pyp_etl_pipeline_spark.functions import masking  # noqa: PLC0415
-
     c = load_table(spark, sf, "customer")
     df = c.select(
         "c_custkey",
@@ -1183,8 +1176,6 @@ def p01_header_mapping(spark: SparkSession, sf: str) -> DataFrame:
     the driver's oracle can check the plan-time decision table itself
     (exact alias -> 100, best sum-normalized ratio >= 60, first-in-dict
     tiebreak, override forces the field at confidence 100)."""
-    from pyp_etl_pipeline_spark.plans.header_map import map_headers_to_schema  # noqa: PLC0415
-
     hm = map_headers_to_schema(_P01_HEADERS, overrides=_P01_OVERRIDES)
     rows = []
     for h in _P01_HEADERS:
@@ -1199,8 +1190,6 @@ def p01_header_mapping(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _p01_sql() -> str:
-    from pyp_etl_pipeline_spark.schema import MEMBER_SCHEMA_FIELDS  # noqa: PLC0415
-
     def sql_ratio_max(a: str, b: str) -> str:
         # header_map.ratio: MAX-normalized (not the data plane's
         # sum-normalized sql_ratio — see plans/header_map.py docstring)
@@ -1255,22 +1244,15 @@ P01_SQL = _p01_sql()
 # gf01: calendar-spine gap fill (densification + LOCF)
 # --------------------------------------------------------------------------
 
-from pyp_etl_pipeline_spark.functions.aggregates import (  # noqa: E402
-    _sql_micro as _sqm,
-    sql_finalize_sum as _sfs,
-)
-from pyp_etl_pipeline_spark.operators import windows as _windows  # noqa: E402
-
-
 def gf01_gap_fill(spark: SparkSession, sf: str) -> DataFrame:
     """Hourly gap fill over events: complete per-type spine, zero-filled
     counts, LOCF of the exact hourly sum (operators/windows.gap_fill)."""
-    return _windows.gap_fill(load_table(spark, sf, "events"))
+    return windows.gap_fill(load_table(spark, sf, "events"))
 
 
 GF01_SQL = f"""
 WITH pre AS (
-  SELECT event_type, date_trunc('hour', ts) AS bucket, {_sqm("value")} AS m
+  SELECT event_type, date_trunc('hour', ts) AS bucket, {_sql_micro("value")} AS m
   FROM events
 ),
 agg AS (
@@ -1292,9 +1274,9 @@ j AS (
 )
 SELECT event_type, bucket,
        CAST(coalesce(n, 0) AS BIGINT) AS n_events,
-       {_sfs("s")} AS sum_value,
+       {sql_finalize_sum("s")} AS sum_value,
        n IS NULL AS filled,
-       {_sfs("ls")} AS locf_sum
+       {sql_finalize_sum("ls")} AS locf_sum
 FROM j
 """
 
@@ -1303,25 +1285,19 @@ FROM j
 # ii01: skew-aware inverted index over documents
 # --------------------------------------------------------------------------
 
-from pyp_etl_pipeline_spark.driver_queries import sql_normalized_text as _snt  # noqa: E402
-from pyp_etl_pipeline_spark.operators import textan as _textan  # noqa: E402
-
-
 def ii01_inverted_index(spark: SparkSession, sf: str) -> DataFrame:
     """Posting lists per token with df bounds pruned BEFORE list
     construction (operators/textan.inverted_index) — the search-index /
     collocation-mining primitive, shaped so stopword keys never reach
     the list-building shuffle."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-
     # the synthetic corpus has a tiny, highly shared vocabulary — a 0.9
     # ratio keeps real posting lists while still exercising the prune
-    return _textan.inverted_index(_load_corpus(spark, sf, "documents"), max_df_ratio=0.9)
+    return textan.inverted_index(load_corpus(spark, sf, "documents"), max_df_ratio=0.9)
 
 
 II01_SQL = f"""
 WITH t AS (
-  SELECT doc_id, unnest(string_split({_snt("text")}, ' ')) AS token
+  SELECT doc_id, unnest(string_split({sql_normalized_text("text")}, ' ')) AS token
   FROM documents
 ),
 tf AS (
@@ -1344,19 +1320,16 @@ GROUP BY 1, 2, 3
 # qt01: mergeable histogram quantile sketch over events.value
 # --------------------------------------------------------------------------
 
-from pyp_etl_pipeline_spark.operators import sketch as _sketch  # noqa: E402
-
-
 def qt01_histogram_quantiles(spark: SparkSession, sf: str) -> DataFrame:
     """p50/p95/p99 per event_type from a 32-bin mergeable integer
     histogram (operators/sketch.histogram_quantiles) — the
     sort-free percentile shape for 100 TB rollups."""
-    return _sketch.histogram_quantiles(load_table(spark, sf, "events"))
+    return sketch.histogram_quantiles(load_table(spark, sf, "events"))
 
 
 QT01_SQL = f"""
 WITH v AS (
-  SELECT event_type AS g, {_sqm("value")} AS m FROM events WHERE value IS NOT NULL
+  SELECT event_type AS g, {_sql_micro("value")} AS m FROM events WHERE value IS NOT NULL
 ),
 b AS (SELECT g, min(m) AS lo, max(m) AS hi, count(*) AS n FROM v GROUP BY 1),
 binned AS (
@@ -1390,17 +1363,42 @@ def ev01_linkage_eval(spark: SparkSession, sf: str) -> DataFrame:
     against exact shingle-Jaccard >= 0.5 truth pairs
     (operators/quality.linkage_eval) — the recall audit every LSH/blocking
     scheme needs before it gates a 100 TB dedup."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.operators import dedup as _dedup  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.operators import quality as _quality  # noqa: PLC0415
-
-    d = _load_corpus(spark, sf, "documents")
-    pred = _dedup.simhash_pairs(d, max_hamming=6)
-    truth = _dedup.shingle_pairs_jaccard(d, threshold=0.5)
-    return _quality.linkage_eval(pred, truth)
+    d = load_corpus(spark, sf, "documents")
+    pred = dedup.simhash_pairs(d, max_hamming=6)
+    truth = dedup.shingle_pairs_jaccard(d, threshold=0.5)
+    return quality.linkage_eval(pred, truth)
 
 
-EV01_SQL: str | None = None  # composed in _finalize (needs SH01/DD02 twins)
+def _ev01_sql(sh01_body: str, dd02_body: str) -> str:
+    return f"""
+WITH pred AS (SELECT DISTINCT id_a, id_b FROM ({sh01_body})),
+truth AS (SELECT DISTINCT id_a, id_b FROM ({dd02_body})),
+j AS (
+  SELECT coalesce(p.id_a, t.id_a) AS id_a,
+         CASE WHEN p.id_a IS NOT NULL THEN 1 END AS in_pred,
+         CASE WHEN t.id_a IS NOT NULL THEN 1 END AS in_truth
+  FROM pred p FULL JOIN truth t ON p.id_a = t.id_a AND p.id_b = t.id_b
+),
+agg AS (
+  SELECT CAST(coalesce(sum(in_pred), 0) AS BIGINT) AS n_pred,
+         CAST(coalesce(sum(in_truth), 0) AS BIGINT) AS n_truth,
+         CAST(sum(CASE WHEN in_pred IS NOT NULL AND in_truth IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS tp
+  FROM j
+),
+m AS (
+  SELECT *,
+         CAST(n_pred - tp AS BIGINT) AS fp, CAST(n_truth - tp AS BIGINT) AS fn,
+         CASE WHEN n_pred > 0 THEN CAST((tp * 1000000) // n_pred AS BIGINT) END AS precision_micro,
+         CASE WHEN n_truth > 0 THEN CAST((tp * 1000000) // n_truth AS BIGINT) END AS recall_micro
+  FROM agg
+)
+SELECT n_pred, n_truth, tp, fp, fn, precision_micro, recall_micro,
+       CASE WHEN precision_micro IS NOT NULL AND recall_micro IS NOT NULL
+                 AND precision_micro + recall_micro > 0
+            THEN CAST((2 * precision_micro * recall_micro) // (precision_micro + recall_micro) AS BIGINT)
+       END AS f1_micro
+FROM m
+"""
 
 
 # --------------------------------------------------------------------------
@@ -1412,11 +1410,8 @@ def tk02_wordpiece_segment(spark: SparkSession, sf: str) -> DataFrame:
     against a corpus-derived WordPiece vocab (single chars + top-10-word
     prefixes) — operators/bpe.wordpiece_segment. Completes the tokenizer
     lifecycle: train (tk01) -> apply (tk02) -> pack (pk01)."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.operators import bpe as _bpe  # noqa: PLC0415
-
-    w = _bpe.word_counts(_load_corpus(spark, sf, "documents"))
-    return _bpe.wordpiece_segment(w, _bpe.wordpiece_vocab(w))
+    w = bpe.word_counts(load_corpus(spark, sf, "documents"))
+    return bpe.wordpiece_segment(w, bpe.wordpiece_vocab(w))
 
 
 TK02_SQL = f"""
@@ -1424,7 +1419,7 @@ WITH RECURSIVE
 w AS (
   SELECT word, CAST(count(*) AS BIGINT) AS cnt
   FROM (
-    SELECT unnest(string_split({_snt("text")}, ' ')) AS word FROM documents
+    SELECT unnest(string_split({sql_normalized_text("text")}, ' ')) AS word FROM documents
   ) WHERE word <> '' GROUP BY 1
 ),
 chars AS (
@@ -1470,11 +1465,6 @@ WHERE walk.pos = length(w.word) + 1
 # ia01: incremental aggregate-state merge == single-pass aggregate
 # --------------------------------------------------------------------------
 
-from pyp_etl_pipeline_spark.functions.aggregates import sql_finalize_avg as _sfa  # noqa: E402
-from pyp_etl_pipeline_spark.operators import incremental as _incr  # noqa: E402
-from pyp_etl_pipeline_spark.operators.sketch import sql_hll_distinct as _shll  # noqa: E402
-
-
 def ia01_incremental_rollup(spark: SparkSession, sf: str) -> DataFrame:
     """History-state + delta-state MERGED (operators/incremental) must
     equal the single-pass aggregate over all events — the oracle
@@ -1484,22 +1474,22 @@ def ia01_incremental_rollup(spark: SparkSession, sf: str) -> DataFrame:
     e = load_table(spark, sf, "events")
     hist = e.filter(F.col("event_id") % 3 != 0)
     delta = e.filter(F.col("event_id") % 3 == 0)
-    merged = _incr.merge_states(_incr.agg_state(hist), _incr.agg_state(delta))
-    return _incr.finalize_state(merged)
+    merged = incremental.merge_states(incremental.agg_state(hist), incremental.agg_state(delta))
+    return incremental.finalize_state(merged)
 
 
 IA01_SQL = f"""
-WITH v AS (SELECT event_type, user_id, {_sqm("value")} AS m FROM events),
+WITH v AS (SELECT event_type, user_id, {_sql_micro("value")} AS m FROM events),
 s AS (
   SELECT event_type, CAST(count(*) AS BIGINT) AS n_rows,
          CAST(count(m) AS BIGINT) AS n_vals,
          sum(m) AS sum_micro, min(m) AS min_m, max(m) AS max_m
   FROM v GROUP BY 1
 ),
-h AS ({_shll("events", "user_id", ("event_type",))})
+h AS ({sql_hll_distinct("events", "user_id", ("event_type",))})
 SELECT s.event_type, s.n_rows, s.n_vals,
-       {_sfs("s.sum_micro")} AS sum_value,
-       {_sfa("s.sum_micro", "s.n_vals")} AS avg_value,
+       {sql_finalize_sum("s.sum_micro")} AS sum_value,
+       {sql_finalize_avg("s.sum_micro", "s.n_vals")} AS avg_value,
        CAST(s.min_m / 1000000.0 AS DOUBLE) AS min_value,
        CAST(s.max_m / 1000000.0 AS DOUBLE) AS max_value,
        h.est_distinct
@@ -1515,14 +1505,12 @@ def bm01_bm25_rank(spark: SparkSession, sf: str) -> DataFrame:
     """Top-10 corpus docs by BM25 for the 3 mid-df query terms
     (operators/textan.bm25_rank) — the query-time half of the search
     index whose storage half is ii01."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-
-    return _textan.bm25_rank(_load_corpus(spark, sf, "documents"))
+    return textan.bm25_rank(load_corpus(spark, sf, "documents"))
 
 
 BM01_SQL = f"""
 WITH t AS (
-  SELECT doc_id, unnest(string_split({_snt("text")}, ' ')) AS token FROM documents
+  SELECT doc_id, unnest(string_split({sql_normalized_text("text")}, ' ')) AS token FROM documents
 ),
 t2 AS (SELECT doc_id, token FROM t WHERE token <> ''),
 tf AS (SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf FROM t2 GROUP BY 1, 2),
@@ -1563,17 +1551,8 @@ def pt01_partition_pruned_rollup(spark: SparkSession, sf: str) -> DataFrame:
     this query certifies the layout round-trip produces correct DATA.
     The one collect is a single scalar (the target date), independent
     of corpus size."""
-    import os  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.sources.bucketed import (  # noqa: PLC0415
-        read_partition_pruned,
-        write_date_partitioned,
-    )
-
     e = load_table(spark, sf, "events")
     target = e.agg(F.max(F.to_date("ts"))).collect()[0][0]
-    from pyp_etl_pipeline_spark.driver_queries_ext import scratch_path  # noqa: PLC0415
 
     path = scratch_path("pt01_scratch")
     write_date_partitioned(e, path)
@@ -1587,7 +1566,7 @@ def pt01_partition_pruned_rollup(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy("window_start", "event_type")
         .agg(
             F.count("*").alias("n_events"),
-            _exact_sum("value").alias("sum_value"),
+            exact_sum("value").alias("sum_value"),
         )
     )
 
@@ -1595,7 +1574,7 @@ def pt01_partition_pruned_rollup(spark: SparkSession, sf: str) -> DataFrame:
 PT01_SQL = f"""
 WITH d AS (SELECT max(CAST(ts AS DATE)) AS target FROM events)
 SELECT date_trunc('hour', ts) AS window_start, event_type,
-       count(*) AS n_events, {_ses("value")} AS sum_value
+       count(*) AS n_events, {sql_exact_sum("value")} AS sum_value
 FROM events, d
 WHERE CAST(ts AS DATE) = d.target
 GROUP BY 1, 2
@@ -1616,21 +1595,6 @@ def st09_stream_stream_left_join(spark: SparkSession, sf: str) -> DataFrame:
     of the result); the null rows then flush on the no-data micro-batch.
     The oracle is the plain batch LEFT JOIN — the streaming run must
     reproduce it exactly."""
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-    import time  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
-    from pyspark.sql.types import LongType as _Long  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.streaming.events import (  # noqa: PLC0415
-        read_events_stream,
-        streaming_window_join,
-    )
-
-    from pyp_etl_pipeline_spark.driver_queries_ext import scratch_path  # noqa: PLC0415
-
     scratch = scratch_path("st09_scratch")
     shutil.rmtree(scratch, ignore_errors=True)
     os.makedirs(scratch)
@@ -1639,7 +1603,7 @@ def st09_stream_stream_left_join(spark: SparkSession, sf: str) -> DataFrame:
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = spark.read.parquet(src)
-    nanos = isinstance(raw.schema["ts"].dataType, _Long)
+    nanos = isinstance(raw.schema["ts"].dataType, LongType)
     ts_expr = F.expr(f"ts + {30 * 86400 * 10**9}") if nanos else F.expr("ts + INTERVAL 30 DAYS")
     sentinel = (
         raw.orderBy(F.col("ts").desc())
@@ -1773,10 +1737,8 @@ def ad01_traffic_anomalies(spark: SparkSession, sf: str) -> DataFrame:
     (windows.group_zscores). The composition every traffic monitor
     needs: without the spine, the most important anomalies (missing
     hours) are invisible."""
-    from pyp_etl_pipeline_spark.operators import windows as _w  # noqa: PLC0415
-
-    filled = _windows.gap_fill(load_table(spark, sf, "events"))
-    out = _w.group_zscores(
+    filled = windows.gap_fill(load_table(spark, sf, "events"))
+    out = windows.group_zscores(
         filled, group_col="event_type", value_col="n_events", id_col="bucket",
         z_threshold=2.0,
     )
@@ -1821,12 +1783,12 @@ def wz01_winsorized_stats(spark: SparkSession, sf: str) -> DataFrame:
     """Per-type mean with outliers clipped at the sketch p05/p95
     (operators/sketch.winsorized_stats) — robust stats without a
     per-group sort; bounds come from the mergeable histogram."""
-    return _sketch.winsorized_stats(load_table(spark, sf, "events"))
+    return sketch.winsorized_stats(load_table(spark, sf, "events"))
 
 
 WZ01_SQL = f"""
 WITH v AS (
-  SELECT event_type AS g, {_sqm("value")} AS m FROM events WHERE value IS NOT NULL
+  SELECT event_type AS g, {_sql_micro("value")} AS m FROM events WHERE value IS NOT NULL
 ),
 b AS (SELECT g, min(m) AS lo, max(m) AS hi, count(*) AS n FROM v GROUP BY 1),
 binned AS (
@@ -1876,9 +1838,6 @@ def mm08_hadamard_spectrum(spark: SparkSession, sf: str) -> DataFrame:
     coefficient from the closed-form synth signal, so the full decode +
     transform path is hash-certified — real spectral DSP with zero
     float drift (no trig: the WHT basis is ±1)."""
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import hadamard_spectrum  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.multimodal.codecs import wav_encode_pcm16  # noqa: PLC0415
-
     def ramp_clip(i: int) -> bytes:
         k = 1 + i % 7
         return wav_encode_pcm16([(((j * k) % 256) - 128) * 64 for j in range(100 + i % 50)], 8000)
@@ -1920,8 +1879,6 @@ def cp01_compaction_plan(spark: SparkSession, sf: str) -> DataFrame:
     merge groups over the deterministic distributed prefix sum, and the
     rollup certifies group contiguity (min/max day per group) — the
     lakehouse OPTIMIZE planning step."""
-    from pyp_etl_pipeline_spark.operators.export import plan_compaction  # noqa: PLC0415
-
     files = (
         load_table(spark, sf, "orders")
         .groupBy("o_orderdate")
@@ -1965,15 +1922,13 @@ def tx15_readability(spark: SparkSession, sf: str) -> DataFrame:
     readability_features) — the classic readability screen for corpus
     curation, with vowel-group syllable estimates and a micro-floored
     engine-identical score."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-
-    return _textan.readability_features(_load_corpus(spark, sf, "documents"))
+    return textan.readability_features(load_corpus(spark, sf, "documents"))
 
 
 TX15_SQL = f"""
 WITH t AS (
   SELECT doc_id, text,
-         list_filter(string_split({_snt("text")}, ' '), w -> w <> '') AS toks,
+         list_filter(string_split({sql_normalized_text("text")}, ' '), w -> w <> '') AS toks,
          list_filter(string_split_regex(text, '[.!?]+'), x -> trim(x) <> '') AS sents
   FROM documents
 ),
@@ -2010,8 +1965,6 @@ def pf01_table_profile(spark: SparkSession, sf: str) -> DataFrame:
     min / max per column — the data-catalog summary every published
     table carries. At 100 TB the distincts swap to HLL registers
     (ia01's pattern); the contract is unchanged."""
-    from pyp_etl_pipeline_spark.operators.quality import profile_table  # noqa: PLC0415
-
     c = load_table(spark, sf, "customer")
     return profile_table(
         c, ("c_custkey", "c_name", "c_nationkey", "c_mktsegment", "c_acctbal")
@@ -2045,8 +1998,6 @@ def ep01_epoch_shuffle(spark: SparkSession, sf: str) -> DataFrame:
     Epochs decorrelate (different orders/shards) yet every epoch is
     byte-reproducible after a crash; the oracle recomputes both epochs
     from the same md5 keys."""
-    from pyp_etl_pipeline_spark.operators.sampling import epoch_shuffle  # noqa: PLC0415
-
     d = load_table(spark, sf, "documents").select("doc_id", "n_chars")
     eps = [epoch_shuffle(d, epoch=e) for e in (0, 1)]
     both = eps[0].unionByName(eps[1])
@@ -2086,8 +2037,6 @@ def tc01_triangle_census(spark: SparkSession, sf: str) -> DataFrame:
     triangle_stats) — out-degree bounded O(sqrt(m)) after orientation,
     so the wedge join survives hub-heavy graphs where naive id-ordering
     explodes."""
-    from pyp_etl_pipeline_spark.operators.graph import triangle_stats  # noqa: PLC0415
-
     li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_suppkey")
     # one month of orders: the full-history co-purchase graph converges
     # to a complete graph as sf grows (every supplier eventually shares
@@ -2162,10 +2111,7 @@ def bf01_bloom_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     the result reports bloom flags NEXT TO the exact semi-join flags —
     certifying the no-false-negative guarantee row by row (flagged_exact
     implies flagged_bloom) and measuring the false-positive cost."""
-    from pyp_etl_pipeline_spark.operators.dedup import word_shingles  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     # null text shingles to a single NULL entry (array_join(NULL)) —
     # filter it so null-text docs are absent from the report, matching
     # the twin's unnest(NULL)-drops-row semantics (null sweep, r8)
@@ -2181,8 +2127,8 @@ def bf01_bloom_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
         .filter(F.col("shingle").isNotNull())
         .distinct()
     )
-    bloom = _sketch.bloom_build(bench_sh, "shingle")
-    probed = _sketch.bloom_probe(corpus_sh, bloom, "shingle")
+    bloom = sketch.bloom_build(bench_sh, "shingle")
+    probed = sketch.bloom_probe(corpus_sh, bloom, "shingle")
     exact = corpus_sh.join(bench_sh, "shingle").select("doc_id").distinct().withColumn(
         "flagged_exact", F.lit(True)
     )
@@ -2203,16 +2149,13 @@ def bf01_bloom_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _bf01_sql(n_bits: int = 8192, k: int = 4, salt: str = "bloom-v1") -> str:
-    from pyp_etl_pipeline_spark.driver_queries import sql_shingles as _sqsh  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.operators.sketch import sql_h48  # noqa: PLC0415
-
     pos_sel = ", ".join(
         f"{sql_h48('shingle', f'{salt}:{r}')} % {n_bits} AS p{r}" for r in range(k)
     )
     probe_pos = ", ".join(f"p{r}" for r in range(k))
     return f"""
-WITH t AS (SELECT doc_id, string_split({_snt("text")}, ' ') AS toks FROM documents),
-s AS (SELECT doc_id, {_sqsh("toks")} AS sh FROM t),
+WITH t AS (SELECT doc_id, string_split({sql_normalized_text("text")}, ' ') AS toks FROM documents),
+s AS (SELECT doc_id, {sql_shingles("toks")} AS sh FROM t),
 bench AS (SELECT DISTINCT unnest(sh) AS shingle FROM s WHERE doc_id % 25 = 0),
 corpus AS (SELECT DISTINCT doc_id, unnest(sh) AS shingle FROM s WHERE doc_id % 25 <> 0),
 bpos AS (SELECT {pos_sel} FROM bench),
@@ -2261,17 +2204,6 @@ def st10_streaming_materialized_rollup(spark: SparkSession, sf: str) -> DataFram
     final materialized state, finalized at read time, must equal the
     single-pass batch aggregate over ALL events — which is exactly what
     the oracle computes."""
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.operators import incremental as incr  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.streaming.events import read_events_stream  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.tables import load_table as _lt  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.driver_queries_ext import scratch_path  # noqa: PLC0415
-
     scratch = scratch_path("st10_scratch")
     shutil.rmtree(scratch, ignore_errors=True)
     os.makedirs(scratch)
@@ -2286,9 +2218,9 @@ def st10_streaming_materialized_rollup(spark: SparkSession, sf: str) -> DataFram
     state = {"scalars": None, "regs": None, "n_batches": 0}
 
     def fold_batch(batch_df, batch_id):  # noqa: ANN001
-        s = incr.agg_state(batch_df)
+        s = incremental.agg_state(batch_df)
         if state["scalars"] is not None:
-            s = incr.merge_states((state["scalars"], state["regs"]), s)
+            s = incremental.merge_states((state["scalars"], state["regs"]), s)
         # anchor the merged state so lineage does not grow per batch
         state["scalars"] = s[0].localCheckpoint()
         state["regs"] = s[1].localCheckpoint()
@@ -2300,7 +2232,7 @@ def st10_streaming_materialized_rollup(spark: SparkSession, sf: str) -> DataFram
     q.processAllAvailable()
     q.stop()
     assert state["n_batches"] >= 2, "split feed must arrive as multiple micro-batches"
-    return incr.finalize_state((state["scalars"], state["regs"]))
+    return incremental.finalize_state((state["scalars"], state["regs"]))
 
 
 ST10_SQL = IA01_SQL
@@ -2365,9 +2297,6 @@ def mm09_image_dhash(spark: SparkSession, sf: str) -> DataFrame:
     from the closed-form pixel pattern, so stride/unfilter/sampling
     bugs break the hash — and the hash itself is the image-side SimHash
     for near-duplicate image dedup."""
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import dhash_features  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.multimodal.codecs import png_encode_gray_pixels  # noqa: PLC0415
-
     d = load_table(spark, sf, "documents").select("doc_id").filter(F.col("doc_id") % 2 == 0)
     media = synth_media(
         d,
@@ -2425,8 +2354,6 @@ def mm10_image_neardup_pairs(spark: SparkSession, sf: str) -> DataFrame:
     modulo small cycles produce genuinely similar images, so real pairs
     exist. Never all-pairs: candidates come from chunk-equality
     buckets."""
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import dhash_features  # noqa: PLC0415
-
     # same media as mm09. The hash relation feeds BOTH self-join legs, and
     # the MapInPandas synth+decode chain defeats plan canonicalization, so
     # ReuseExchange misses and the whole Python decode pipeline ran TWICE
@@ -2512,19 +2439,14 @@ def ann06_ivfpq_topk(spark: SparkSession, sf: str) -> DataFrame:
     (similarity.ivfpq_topk). The twin replays coarse training, vector
     assignment, probe selection, PQ training, encoding, LUTs and ADC —
     every stage on the same integers, hash-certified."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.operators import similarity as _sim  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus_unique  # noqa: PLC0415
-
-    emb = _load_corpus_unique(spark, sf, "embeddings")
+    emb = load_corpus_unique(spark, sf, "embeddings")
     # fused fit: bit-identical to kmeans_fit(k=8) + pq_fit(m=4, ksub=8)
     # at half the training scans (pinned by test_ivfpq_fit_fused_equals_separate)
-    coarse, books = _sim.ivfpq_fit(emb, k=8, m=4, ksub=8, n_iter=1)
+    coarse, books = similarity.ivfpq_fit(emb, k=8, m=4, ksub=8, n_iter=1)
     q = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    out = _sim.ivfpq_topk(emb, q, coarse, books, nprobe=2, k=5)
+    out = similarity.ivfpq_topk(emb, q, coarse, books, nprobe=2, k=5)
     return out.select(
         "query_id",
         "neighbor_id",
@@ -2667,17 +2589,12 @@ def ann07_ivfpq_refine_topk(spark: SparkSession, sf: str) -> DataFrame:
     production recall fix. The shortlist broadcasts into the raw-vector
     scan (map-only second touch of the corpus); the twin replays the
     full ann06 pipeline at k*r and the rerank join bit-for-bit."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.operators import similarity as _sim  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus_unique  # noqa: PLC0415
-
-    emb = _load_corpus_unique(spark, sf, "embeddings")
-    coarse, books = _sim.ivfpq_fit(emb, k=8, m=4, ksub=8, n_iter=1)
+    emb = load_corpus_unique(spark, sf, "embeddings")
+    coarse, books = similarity.ivfpq_fit(emb, k=8, m=4, ksub=8, n_iter=1)
     q = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    out = _sim.ivfpq_refine_topk(emb, q, coarse, books, nprobe=2, k=5, r_factor=3)
+    out = similarity.ivfpq_refine_topk(emb, q, coarse, books, nprobe=2, k=5, r_factor=3)
     return out.select(
         "query_id",
         "neighbor_id",
@@ -2724,14 +2641,7 @@ def fm01_orc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     row counts, and exact integer sums survive the format conversion.
     Columnar-format interop is a real migration surface: a 100 TB lake
     conversion job is exactly this plan at scale (scan -> write -> audit)."""
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.functions.aggregates import exact_sum  # noqa: PLC0415
-
     o = load_table(spark, sf, "orders")
-    from pyp_etl_pipeline_spark.driver_queries_ext import scratch_path  # noqa: PLC0415
 
     path = scratch_path("fm01_orc")
     shutil.rmtree(path, ignore_errors=True)
@@ -2747,8 +2657,6 @@ def fm01_orc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _fm01_sql() -> str:
-    from pyp_etl_pipeline_spark.functions.aggregates import sql_exact_sum  # noqa: PLC0415
-
     return f"""
 SELECT o_orderstatus,
        CAST(count(*) AS BIGINT) AS n_orders,
@@ -2774,9 +2682,6 @@ def mm12_gif_decode(spark: SparkSession, sf: str) -> DataFrame:
     on a (1 + doc_id%16) x (1 + doc_id%8) grid — so any codec bug
     (wrong width schedule, shifted scanline, palette misread) breaks
     the position-weighted checksum."""
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import gif_pixel_stats  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.multimodal.codecs import gif_encode_gray_pixels  # noqa: PLC0415
-
     d = load_table(spark, sf, "documents").select("doc_id")
     media = synth_media(
         d,
@@ -2815,9 +2720,6 @@ def mm13_gif_animation_frames(spark: SparkSession, sf: str) -> DataFrame:
     twin reproduces every frame's position-weighted checksum
     analytically, so a frame-boundary bug (GCE misparse, leaked dict
     state across frames, wrong sub-block stitch) breaks the hash."""
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import gif_frame_stats  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.multimodal.codecs import gif_encode_gray_animation  # noqa: PLC0415
-
     def animation(i: int) -> bytes:
         w, h = 1 + i % 16, 1 + i % 8
         frames = [
@@ -2864,12 +2766,7 @@ def se01_schema_evolution(spark: SparkSession, sf: str) -> DataFrame:
     p= directory key. The rollup is certified against an ANALYTIC twin
     on the source table, so any column mis-mapped, dropped, or
     spuriously backfilled by the evolving read breaks the hash."""
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
     d = load_table(spark, sf, "documents")
-    from pyp_etl_pipeline_spark.driver_queries_ext import scratch_path  # noqa: PLC0415
 
     root = scratch_path("se01_evolve")
     shutil.rmtree(root, ignore_errors=True)
@@ -2915,19 +2812,14 @@ def ev02_ann_recall(spark: SparkSession, sf: str) -> DataFrame:
     sibling of ev01's linkage metrics). The twin replays the ENTIRE
     ann06 pipeline plus the brute-force ranking and the overlap count,
     so the measured recall itself is hash-certified."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.operators import similarity as _sim  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus_unique  # noqa: PLC0415
-
-    emb = _load_corpus_unique(spark, sf, "embeddings")
-    coarse, books = _sim.ivfpq_fit(emb, k=8, m=4, ksub=8, n_iter=1)
+    emb = load_corpus_unique(spark, sf, "embeddings")
+    coarse, books = similarity.ivfpq_fit(emb, k=8, m=4, ksub=8, n_iter=1)
     q = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    approx = _sim.ivfpq_topk(emb, q, coarse, books, nprobe=2, k=5)
-    exact = _sim.exact_l2_topk(emb, q, k=5)
-    return _sim.ann_recall(approx, exact, k=5)
+    approx = similarity.ivfpq_topk(emb, q, coarse, books, nprobe=2, k=5)
+    exact = similarity.exact_l2_topk(emb, q, k=5)
+    return similarity.ann_recall(approx, exact, k=5)
 
 
 def _ev02_sql(k: int = 5, dim: int = 64) -> str:
@@ -3037,12 +2929,9 @@ def ks01_keep_best_per_cluster(spark: SparkSession, sf: str) -> DataFrame:
     cluster_id, already co-partitioned from the aggregate (AQE
     broadcasts it when small). Output: every clustered doc with its
     keeper and verdict."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.operators import dedup as _dedup  # noqa: PLC0415
-
-    d = _load_corpus(spark, sf, "documents")
-    pairs = _dedup.shingle_pairs_jaccard(d, threshold=0.5)
-    clusters = _dedup.dup_clusters(pairs)
+    d = load_corpus(spark, sf, "documents")
+    pairs = dedup.shingle_pairs_jaccard(d, threshold=0.5)
+    clusters = dedup.dup_clusters(pairs)
     member = clusters.join(d.select("doc_id", "n_chars"), "doc_id")
     # NULL-quality docs must not win the election: Spark sorts a NULL
     # struct field FIRST under min() while the twin's ORDER BY ... DESC
@@ -3068,9 +2957,9 @@ def ks01_keep_best_per_cluster(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _ks01_sql(DD04_SQL: str) -> str:
+def _ks01_sql(dd04_body: str) -> str:
     return f"""
-WITH c AS ({DD04_SQL}),
+WITH c AS ({dd04_body}),
 member AS (
   SELECT c.doc_id, c.cluster_id, CAST(d.n_chars AS BIGINT) AS n_chars
   FROM c JOIN documents d ON d.doc_id = c.doc_id
@@ -3086,9 +2975,6 @@ FROM member m JOIN keeper k USING (cluster_id)
 """
 
 
-KS01_SQL: str | None = None  # composed in _finalize (needs ext's DD04 twin)
-
-
 # --------------------------------------------------------------------------
 # tx16: held-out perplexity gate (no self-scoring leakage)
 # --------------------------------------------------------------------------
@@ -3097,26 +2983,22 @@ def tx16_heldout_logprob(spark: SparkSession, sf: str) -> DataFrame:
     """Odd docs scored under the add-one unigram LM fit on EVEN docs
     (operators/textan.heldout_unigram_logprob) — the leakage-free
     variant of the tx06 quality gate, with OOV counts."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-
-    d = _load_corpus(spark, sf, "documents")
-    return _textan.heldout_unigram_logprob(
+    d = load_corpus(spark, sf, "documents")
+    return textan.heldout_unigram_logprob(
         d.filter(F.col("doc_id") % 2 == 0), d.filter(F.col("doc_id") % 2 == 1)
     )
 
 
 def _tx16_sql() -> str:
-    from pyp_etl_pipeline_spark.functions.aggregates import sql_exact_avg as _seav  # noqa: PLC0415
-
     return f"""
 WITH tr AS (
-  SELECT unnest(string_split({_snt("text")}, ' ')) AS tok
+  SELECT unnest(string_split({sql_normalized_text("text")}, ' ')) AS tok
   FROM documents WHERE doc_id % 2 = 0
 ),
 counts AS (SELECT tok, count(*) AS tok_n FROM tr WHERE tok <> '' GROUP BY 1),
 scal AS (SELECT sum(tok_n) AS train_n, count(*) AS train_v FROM counts),
 ex AS (
-  SELECT doc_id AS id, unnest(string_split({_snt("text")}, ' ')) AS tok
+  SELECT doc_id AS id, unnest(string_split({sql_normalized_text("text")}, ' ')) AS tok
   FROM documents WHERE doc_id % 2 = 1
 ),
 sc AS (
@@ -3127,7 +3009,7 @@ sc AS (
 )
 SELECT id, CAST(count(*) AS BIGINT) AS n_tokens,
        CAST(sum(CASE WHEN tok_n IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
-       {_seav("logp")} AS mean_logprob
+       {sql_exact_avg("logp")} AS mean_logprob
 FROM sc GROUP BY 1
 """
 
@@ -3144,10 +3026,7 @@ def ws01_weighted_sample(spark: SparkSession, sf: str) -> DataFrame:
     (operators/sampling.weighted_sample) — inclusion odds proportional
     to length, bit-reproducible (md5-uniform keys, no RNG)."""
     d = load_table(spark, sf, "documents").select("doc_id", "n_chars")
-    return _sampling.weighted_sample(d, "n_chars")
-
-
-from pyp_etl_pipeline_spark.operators import sampling as _sampling  # noqa: E402
+    return sampling.weighted_sample(d, "n_chars")
 
 
 WS01_SQL = """
@@ -3218,16 +3097,13 @@ def pp02_multimodal_curation(spark: SparkSession, sf: str) -> DataFrame:
     individually hash-certified queries, and the composed manifest is
     certified again here. First matching reason wins (dup before
     quality before image — dedup order mirrors pp01)."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.operators import dedup as _dedup  # noqa: PLC0415
-
-    d = _load_corpus(spark, sf, "documents")
-    fp = d.select("doc_id", _dedup.fingerprint("text").alias("f"))
+    d = load_corpus(spark, sf, "documents")
+    fp = d.select("doc_id", dedup.fingerprint("text").alias("f"))
     keeper = fp.groupBy("f").agg(F.min("doc_id").alias("keep_id"))
     tdup = fp.join(keeper, "f").select(
         "doc_id", (F.col("doc_id") != F.col("keep_id")).alias("is_text_dup")
     )
-    g = _textan.gopher_quality_flags(d).select(
+    g = textan.gopher_quality_flags(d).select(
         F.col("id").alias("doc_id"), "gopher_pass"
     )
     img_drop = (
@@ -3253,15 +3129,13 @@ def pp02_multimodal_curation(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _pp02_sql(TX07_SQL: str) -> str:
-    from pyp_etl_pipeline_spark.driver_queries import sql_normalized_text as _snt2  # noqa: PLC0415
-
+def _pp02_sql(tx07_body: str) -> str:
     return f"""
-WITH fp AS (SELECT doc_id, md5({_snt2("text")}) AS f FROM documents),
+WITH fp AS (SELECT doc_id, md5({sql_normalized_text("text")}) AS f FROM documents),
 keeper AS (SELECT f, min(doc_id) AS keep_id FROM fp GROUP BY 1),
 tdup AS (SELECT fp.doc_id, fp.doc_id <> k.keep_id AS is_text_dup FROM fp JOIN keeper k USING (f)),
-g AS (SELECT doc_id, gopher_pass FROM ({TX07_SQL})),
-ip AS (SELECT DISTINCT id_b AS doc_id FROM ({{MM10_BODY}})),
+g AS (SELECT doc_id, gopher_pass FROM ({tx07_body})),
+ip AS (SELECT DISTINCT id_b AS doc_id FROM ({MM10_SQL})),
 m AS (
   SELECT d.doc_id, d.doc_id % 2 = 0 AS has_image,
          CASE WHEN t.is_text_dup THEN 'text_dup'
@@ -3275,9 +3149,6 @@ m AS (
 )
 SELECT doc_id, has_image, status, status = 'kept' AS keep FROM m
 """
-
-
-PP02_SQL: str | None = None  # composed in _finalize (needs ext's TX07 twin)
 
 
 # --------------------------------------------------------------------------
@@ -3299,13 +3170,9 @@ def hy01_hybrid_rrf_fusion(spark: SparkSession, sf: str) -> DataFrame:
     candidate set is bounded at 2k rows BY CONSTRUCTION, so the final
     full-outer join + rank is a constant-size epilogue at any corpus
     size."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.operators import similarity as _sim  # noqa: PLC0415
-
-    text_list = _textan.bm25_rank(_load_corpus(spark, sf, "documents")).select(
+    text_list = textan.bm25_rank(load_corpus(spark, sf, "documents")).select(
         "doc_id", F.col("rank").alias("text_rank")
     )
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus_unique  # noqa: PLC0415
 
     # idempotent-ingest contract: collapse duplicated embedding rows,
     # and restrict to document ids with a SEMI join — an inner join
@@ -3313,7 +3180,7 @@ def hy01_hybrid_rrf_fusion(spark: SparkSession, sf: str) -> DataFrame:
     # rows and let one doc consume two top-10 slots (caught by the
     # --dupes gate run from the sf0.01 base; the twin's IN() was
     # already a semi join)
-    emb = _load_corpus_unique(spark, sf, "embeddings")
+    emb = load_corpus_unique(spark, sf, "embeddings")
     doc_vecs = emb.join(
         load_table(spark, sf, "documents").select(F.col("doc_id").alias("vec_id")),
         "vec_id",
@@ -3322,7 +3189,7 @@ def hy01_hybrid_rrf_fusion(spark: SparkSession, sf: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") == 0).select(
         F.lit(-1).alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    vec_list = _sim.brute_force_topk(doc_vecs, q, k=10).select(
+    vec_list = similarity.brute_force_topk(doc_vecs, q, k=10).select(
         F.col("neighbor_id").alias("doc_id"), F.col("rank").alias("vec_rank")
     )
     cand = (
@@ -3516,8 +3383,6 @@ def gs01_grouping_sets(spark: SparkSession, sf: str) -> DataFrame:
     the flags, not NULL-punning, distinguish super-aggregate rows from
     genuine NULL groups, so the result stays unambiguous on nullable
     group keys. Revenue is the order-independent scaled-long sum."""
-    from pyp_etl_pipeline_spark.functions.aggregates import exact_sum  # noqa: PLC0415
-
     o = load_table(spark, sf, "orders")
     return (
         o.groupingSets(
@@ -3540,7 +3405,7 @@ SELECT o_orderstatus, o_orderpriority,
        CAST(GROUPING(o_orderstatus) AS BIGINT) AS g_status,
        CAST(GROUPING(o_orderpriority) AS BIGINT) AS g_priority,
        count(*) AS n_orders,
-       {_ses("o_totalprice")} AS revenue
+       {sql_exact_sum("o_totalprice")} AS revenue
 FROM orders
 GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
 """
@@ -3563,8 +3428,6 @@ def bfs01_reach_levels(spark: SparkSession, sf: str) -> DataFrame:
     cohorts). Exact set algebra, so the recursive-CTE twin replays it
     identically: the CTE's UNION-dedup walk with min(dist) IS
     breadth-first distance."""
-    from pyp_etl_pipeline_spark.operators import graph  # noqa: PLC0415
-
     li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_suppkey")
     o = load_table(spark, sf, "orders").select("o_orderkey", "o_custkey")
     pairs = (
@@ -3625,21 +3488,17 @@ def hh01_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
     form ("everything above 0.5%"), whose output size is data-driven.
     The final exact-count filter makes the result partitioning-
     independent, so the plain GROUP BY .. HAVING twin is exact."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.operators import dedup as _dd  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.operators import sketch as _sk  # noqa: PLC0415
-
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     toks = d.select(
-        F.explode(F.split(_dd.normalized_text("text"), " ")).alias("tok")
+        F.explode(F.split(dedup.normalized_text("text"), " ")).alias("tok")
     ).filter(F.col("tok") != "")
-    return _sk.heavy_hitters(toks, col="tok", k=200)
+    return sketch.heavy_hitters(toks, col="tok", k=200)
 
 
 HH01_SQL = f"""
 WITH t AS (
   SELECT tok
-  FROM (SELECT unnest(string_split({_snt("text")}, ' ')) AS tok FROM documents)
+  FROM (SELECT unnest(string_split({sql_normalized_text("text")}, ' ')) AS tok FROM documents)
   WHERE tok <> ''
 ),
 n AS (SELECT count(*) AS total FROM t)
@@ -3727,16 +3586,13 @@ def hn01_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
     a contrastive fine-tune (see operators/similarity.py:
     hard_negative_mining for the plan shape and the ANN-shortlist
     production variant)."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.operators import similarity as _sim  # noqa: PLC0415
-
-    emb = _load_corpus(spark, sf, "embeddings")
+    emb = load_corpus(spark, sf, "embeddings")
     anchors = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
         F.col("label").alias("query_label"),
     )
-    return _sim.hard_negative_mining(emb, anchors, k_neg=3)
+    return similarity.hard_negative_mining(emb, anchors, k_neg=3)
 
 
 HN01_SQL = """
@@ -3784,13 +3640,9 @@ def ev03_rank_agreement(spark: SparkSession, sf: str) -> DataFrame:
     hy01; the epilogue is a full join of two 10-row relations plus one
     single-row aggregate — constant-size at any corpus scale. All
     metrics exact integers."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.operators import similarity as _sim  # noqa: PLC0415
-
-    text_list = _textan.bm25_rank(_load_corpus(spark, sf, "documents")).select(
+    text_list = textan.bm25_rank(load_corpus(spark, sf, "documents")).select(
         "doc_id", F.col("rank").cast("long").alias("text_rank")
     )
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus_unique  # noqa: PLC0415
 
     # idempotent-ingest contract: collapse duplicated embedding rows,
     # and restrict to document ids with a SEMI join — an inner join
@@ -3798,7 +3650,7 @@ def ev03_rank_agreement(spark: SparkSession, sf: str) -> DataFrame:
     # rows and let one doc consume two top-10 slots (caught by the
     # --dupes gate run from the sf0.01 base; the twin's IN() was
     # already a semi join)
-    emb = _load_corpus_unique(spark, sf, "embeddings")
+    emb = load_corpus_unique(spark, sf, "embeddings")
     doc_vecs = emb.join(
         load_table(spark, sf, "documents").select(F.col("doc_id").alias("vec_id")),
         "vec_id",
@@ -3807,7 +3659,7 @@ def ev03_rank_agreement(spark: SparkSession, sf: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") == 0).select(
         F.lit(-1).alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    vec_list = _sim.brute_force_topk(doc_vecs, q, k=10).select(
+    vec_list = similarity.brute_force_topk(doc_vecs, q, k=10).select(
         F.col("neighbor_id").alias("doc_id"), F.col("rank").cast("long").alias("vec_rank")
     )
     both = F.col("text_rank").isNotNull() & F.col("vec_rank").isNotNull()
@@ -3878,16 +3730,12 @@ def cu01_curriculum_schedule(spark: SparkSession, sf: str) -> DataFrame:
     threshold ladder, within-phase order from a keyed hash — entirely
     map-only (see operators/sampling.py: curriculum_schedule for why
     NOT ntile)."""
-    from pyp_etl_pipeline_spark.operators import sampling as _sampling  # noqa: PLC0415
-
     docs = load_table(spark, sf, "documents").filter(F.col("text").isNotNull())
-    diff = F.floor(_textan.mean_word_length(F.col("text")) * 1000000 + F.lit(0.5))
-    return _sampling.curriculum_schedule(docs, diff)
+    diff = F.floor(textan.mean_word_length(F.col("text")) * 1000000 + F.lit(0.5))
+    return sampling.curriculum_schedule(docs, diff)
 
 
 def _cu01_sql() -> str:
-    from pyp_etl_pipeline_spark.operators.sampling import sql_hash_bucket  # noqa: PLC0415
-
     toks = "list_filter(string_split_regex(trim(text), '\\s+'), w -> w <> '')"
     return f"""
 WITH t AS (SELECT doc_id, {toks} AS toks FROM documents WHERE text IS NOT NULL),
@@ -3920,10 +3768,8 @@ def dp01_noisy_counts(spark: SparkSession, sf: str) -> DataFrame:
     bounded noise before release — the publication end of the privacy
     family (px01 scrub -> px02 pseudonymize -> ka01 k-anonymize -> dp01
     noisy release). See functions/masking.py: noisy_group_counts."""
-    from pyp_etl_pipeline_spark.functions import masking as _masking  # noqa: PLC0415
-
     docs = load_table(spark, sf, "documents")
-    return _masking.noisy_group_counts(docs, ("lang", "source"), noise_bound=20)
+    return masking.noisy_group_counts(docs, ("lang", "source"), noise_bound=20)
 
 
 DP01_SQL = """
@@ -3951,10 +3797,8 @@ def mk01_mlm_masking_plan(spark: SparkSession, sf: str) -> DataFrame:
     """Deterministic 15% token-masking plan for MLM pretraining over the
     document corpus, with the first-10-token masked preview certifying
     the substitution (see operators/textan.py: mlm_masking_plan)."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-
-    docs = _load_corpus(spark, sf, "documents")
-    return _textan.mlm_masking_plan(docs)
+    docs = load_corpus(spark, sf, "documents")
+    return textan.mlm_masking_plan(docs)
 
 
 def _mk01_sql(mask_pct: int = 15, salt: str = "mlm-v1", preview_n: int = 10) -> str:
@@ -3999,18 +3843,15 @@ def dc03_semantic_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     never shuffles, same contract as dc01. A production run swaps the
     brute scoring for the IVF-PQ shortlist (ann06/ann07) and keeps this
     exact form as its certified ground truth."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.operators import similarity as _sim  # noqa: PLC0415
-
-    emb = _load_corpus(spark, sf, "embeddings").select(
-        "vec_id", _sim._as_double("embedding").alias("__v")
+    emb = load_corpus(spark, sf, "embeddings").select(
+        "vec_id", similarity._as_double("embedding").alias("__v")
     ).filter(F.col("__v").isNotNull())
     ev = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("eid"), F.col("__v").alias("__ev")
     )
     tr = emb.filter(F.col("vec_id") % 100 != 0)
     scored = tr.join(F.broadcast(ev), F.col("vec_id") != F.col("eid")).select(
-        "vec_id", _sim.cosine(F.col("__v"), F.col("__ev")).alias("cos")
+        "vec_id", similarity.cosine(F.col("__v"), F.col("__ev")).alias("cos")
     )
     agg = scored.groupBy("vec_id").agg(
         F.coalesce(
@@ -4109,12 +3950,9 @@ def dd08_dedup_savings(spark: SparkSession, sf: str) -> DataFrame:
     micro. One groupBy over cluster labels, one over sizes, one
     single-row global agg broadcast back — the heavy lifting is the
     already-certified pair+CC pipeline."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.operators import dedup as _dedup  # noqa: PLC0415
-
-    corpus = _load_corpus(spark, sf, "documents")
-    pairs = _dedup.shingle_pairs_jaccard(corpus, threshold=0.5)
-    clusters = _dedup.dup_clusters(pairs)
+    corpus = load_corpus(spark, sf, "documents")
+    pairs = dedup.shingle_pairs_jaccard(corpus, threshold=0.5)
+    clusters = dedup.dup_clusters(pairs)
     sizes = clusters.groupBy("cluster_id").agg(
         F.count(F.lit(1)).cast("long").alias("cluster_size")
     )
@@ -4138,9 +3976,6 @@ def dd08_dedup_savings(spark: SparkSession, sf: str) -> DataFrame:
             F.expr("n_removable_total * CAST(1000000 AS BIGINT) DIV corpus_docs").alias("dedup_ratio_micro"),
         )
     )
-
-
-DD08_SQL: str | None = None  # composed in _finalize (needs ext's DD04 twin)
 
 
 def _dd08_sql(dd04_body: str) -> str:
@@ -4172,9 +4007,7 @@ def ev04_gate_calibration(spark: SparkSession, sf: str) -> DataFrame:
     cheap signal can pre-screen and the expensive gate runs on a
     fraction of the corpus. Map-only signal pass + one
     partial-aggregated groupBy over <=10 bins; exact integers."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-
-    g = _textan.gopher_quality_flags(_load_corpus(spark, sf, "documents"))
+    g = textan.gopher_quality_flags(load_corpus(spark, sf, "documents"))
     binned = g.select(
         F.least(F.lit(9).cast("long"), F.expr("n_words DIV 50")).alias("bin"),
         # NULL gopher_pass (null-injected text) counts as NOT passing in
@@ -4195,9 +4028,6 @@ def ev04_gate_calibration(spark: SparkSession, sf: str) -> DataFrame:
             F.expr("n_pass * CAST(1000000 AS BIGINT) DIV n_docs").alias("pass_rate_micro"),
         )
     )
-
-
-EV04_SQL: str | None = None  # composed in _finalize (needs ext's TX07 twin)
 
 
 def _ev04_sql(tx07_body: str) -> str:
@@ -4233,13 +4063,11 @@ def ev05_gate_kappa(spark: SparkSession, sf: str) -> DataFrame:
     (both engines truncate integer division toward zero — verified).
     Shape: two map-only scoring passes joined on doc_id, one exact
     percentile aggregate (tx11's), one single-row contingency agg."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-
-    docs = _load_corpus(spark, sf, "documents")
-    g = _textan.gopher_quality_flags(docs).select(
+    docs = load_corpus(spark, sf, "documents")
+    g = textan.gopher_quality_flags(docs).select(
         F.col("id").alias("doc_id"), "gopher_pass"
     )
-    scored = docs.select("doc_id", _textan.token_count("text").alias("n_tokens"))
+    scored = docs.select("doc_id", textan.token_count("text").alias("n_tokens"))
     thr = scored.agg(F.percentile("n_tokens", F.lit(0.25)).alias("thr"))
     k = scored.join(F.broadcast(thr)).select(
         "doc_id", (F.col("n_tokens") >= F.col("thr")).alias("keep")
@@ -4272,9 +4100,6 @@ def ev05_gate_kappa(spark: SparkSession, sf: str) -> DataFrame:
             " THEN (po_nano - pe_nano) * CAST(1000000 AS BIGINT) DIV (1000000000 - pe_nano) END"
         ).alias("kappa_micro"),
     )
-
-
-EV05_SQL: str | None = None  # composed in _finalize (needs ext's TX07/TX11 twins)
 
 
 def _ev05_sql(tx07_body: str, tx11_body: str) -> str:
@@ -4413,14 +4238,8 @@ def gr02_star_components(spark: SparkSession, sf: str) -> DataFrame:
     transitive-closure twin as dd04, so the gate certifies the two
     strategies produce identical components on real data (the pytest
     equivalence property, now hash-certified)."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.operators import dedup as _dedup  # noqa: PLC0415
-
-    pairs = _dedup.shingle_pairs_jaccard(_load_corpus(spark, sf, "documents"), threshold=0.5)
-    return _dedup.dup_clusters(pairs, strategy="star")
-
-
-GR02_SQL: str | None = None  # composed in _finalize (dd04's twin, verbatim)
+    pairs = dedup.shingle_pairs_jaccard(load_corpus(spark, sf, "documents"), threshold=0.5)
+    return dedup.dup_clusters(pairs, strategy="star")
 
 
 # --------------------------------------------------------------------------
@@ -4440,14 +4259,12 @@ def cf01_cascade_filter(spark: SparkSession, sf: str) -> DataFrame:
     regex passes over every byte and three regex passes over the
     surviving fraction; both stages stay map-only and pipeline into one
     scan of the survivors."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     screened = d.select(
-        "doc_id", "text", (_textan.token_count("text") >= 50).alias("__keep")
+        "doc_id", "text", (textan.token_count("text") >= 50).alias("__keep")
     )
     survivors = screened.filter(F.col("__keep"))
-    gated = _textan.gopher_quality_flags(survivors.select("doc_id", "text"))
+    gated = textan.gopher_quality_flags(survivors.select("doc_id", "text"))
     counts = screened.agg(
         F.count(F.lit(1)).cast("long").alias("n_total"),
         F.sum(F.when(F.col("__keep"), 0).otherwise(1)).cast("long").alias("n_screened_out"),
@@ -4473,9 +4290,6 @@ def cf01_cascade_filter(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("survivor_pass_micro"),
         )
     )
-
-
-CF01_SQL: str | None = None  # composed in _finalize (needs ext's TX07 twin)
 
 
 def _cf01_sql(tx07_body: str) -> str:
@@ -4521,9 +4335,7 @@ def ev06_quality_auc(spark: SparkSession, sf: str) -> DataFrame:
     (2·npos·nneg). The cumulative window runs over DISTINCT SCORE
     VALUES (bounded cardinality — word counts), not rows; at unbounded
     score cardinality swap in prefix.grouped_prefix_sum, same algebra."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-
-    g = _textan.gopher_quality_flags(_load_corpus(spark, sf, "documents"))
+    g = textan.gopher_quality_flags(load_corpus(spark, sf, "documents"))
     # a NULL score (null text) is unrankable — and the two engines order
     # NULLs differently in an ASC window, so it must not participate
     s = g.filter(F.col("n_words").isNotNull()).select(
@@ -4555,9 +4367,6 @@ def ev06_quality_auc(spark: SparkSession, sf: str) -> DataFrame:
             " DIV (2 * n_pos * (n - n_pos)) END"
         ).alias("auc_micro"),
     )
-
-
-EV06_SQL: str | None = None  # composed in _finalize (needs ext's TX07 twin)
 
 
 def _ev06_sql(tx07_body: str) -> str:
@@ -4601,8 +4410,6 @@ def q07_promo_revenue_share(spark: SparkSession, sf: str) -> DataFrame:
     exact integer micro (the order-independent exact_sum contract), and
     the share as integer micro division — no double sum anywhere, so
     the result is partition-order independent and dtype-exact."""
-    from pyp_etl_pipeline_spark.functions.aggregates import micro_col  # noqa: PLC0415
-
     li = load_table(spark, sf, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01")
     )
@@ -4671,8 +4478,6 @@ def aj02_asof_directions(spark: SparkSession, sf: str) -> DataFrame:
     first in one engine's window and matches nothing in the other's
     join. The twin computes min-at-or-after / max-at-or-before per
     purchase and replays the nearest tie rule."""
-    from pyp_etl_pipeline_spark.operators.asof import asof_join  # noqa: PLC0415
-
     e = load_table(spark, sf, "events").withColumn("ts_sec", F.col("ts").cast("long"))
     p = e.filter((F.col("event_type") == "purchase") & F.col("ts_sec").isNotNull()).select(
         "user_id", "event_id", F.col("ts_sec").alias("ts")
@@ -4736,13 +4541,10 @@ def tk03_vocab_coverage(spark: SparkSession, sf: str) -> DataFrame:
     (tk02) -> EVALUATE (tk03) -> pack (pk01). All stages are
     dimension-sized (distinct words, not corpus rows); the epilogue is
     four single-row aggregates broadcast together."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.operators import bpe as _bpe  # noqa: PLC0415
-
-    d = _load_corpus(spark, sf, "documents")
-    train_w = _bpe.word_counts(d.filter(F.col("doc_id") % 5 != 0))
-    held_w = _bpe.word_counts(d.filter(F.col("doc_id") % 5 == 0))
-    vocab = _bpe.wordpiece_vocab(train_w)
+    d = load_corpus(spark, sf, "documents")
+    train_w = bpe.word_counts(d.filter(F.col("doc_id") % 5 != 0))
+    held_w = bpe.word_counts(d.filter(F.col("doc_id") % 5 == 0))
+    vocab = bpe.wordpiece_vocab(train_w)
     hchars = held_w.select(
         "word",
         "cnt",
@@ -4757,7 +4559,7 @@ def tk03_vocab_coverage(spark: SparkSession, sf: str) -> DataFrame:
         hchars.join(F.broadcast(vocab), "tok", "left_anti").select("word", "cnt").distinct()
     )
     covered = held_w.join(unk_words.select("word"), "word", "left_anti")
-    seg = _bpe.wordpiece_segment(covered, vocab)
+    seg = bpe.wordpiece_segment(covered, vocab)
     vs = vocab.agg(F.count(F.lit(1)).cast("long").alias("vocab_size"))
     tot = held_w.agg(
         F.count(F.lit(1)).cast("long").alias("n_words"),
@@ -4790,7 +4592,7 @@ def tk03_vocab_coverage(spark: SparkSession, sf: str) -> DataFrame:
 def _tk03_sql() -> str:
     words_of = (
         "SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM ("
-        f"SELECT unnest(string_split({_snt('text')}, ' ')) AS word FROM documents WHERE doc_id % 5 {{op}} 0"
+        f"SELECT unnest(string_split({sql_normalized_text('text')}, ' ')) AS word FROM documents WHERE doc_id % 5 {{op}} 0"
         ") WHERE word <> '' GROUP BY 1"
     )
     return f"""
@@ -4872,12 +4674,6 @@ def mm14_resized_thumbs(spark: SparkSession, sf: str) -> DataFrame:
     decode -> resample -> re-encode -> re-decode loop byte-for-byte.
     Both stages are map-only Arrow passes — the thumbnail shape of a
     100 TB image-curation pipeline."""
-    from pyp_etl_pipeline_spark.multimodal.binary_ops import (  # noqa: PLC0415
-        png_pixel_stats,
-        resize_images,
-    )
-    from pyp_etl_pipeline_spark.multimodal.codecs import png_encode_gray_pixels  # noqa: PLC0415
-
     d = load_table(spark, sf, "documents").select("doc_id").filter(F.col("doc_id") % 2 == 0)
     media = synth_media(
         d,
@@ -4919,9 +4715,7 @@ def sa01_skew_audit(spark: SparkSession, sf: str) -> DataFrame:
     decides between plain hash partitioning, AQE skew splitting, and
     sk01's salted join (see operators/skew.py: skew_audit for the
     metric definitions and plan shape)."""
-    from pyp_etl_pipeline_spark.operators import skew as _skew  # noqa: PLC0415
-
-    return _skew.skew_audit(load_table(spark, sf, "events"), "user_id", top_n=10)
+    return skew.skew_audit(load_table(spark, sf, "events"), "user_id", top_n=10)
 
 
 SA01_SQL = """
@@ -4957,19 +4751,13 @@ QUERIES3 = {
     "dp01_noisy_counts": (dp01_noisy_counts, DP01_SQL),
     "mk01_mlm_masking_plan": (mk01_mlm_masking_plan, MK01_SQL),
     "sa01_skew_audit": (sa01_skew_audit, SA01_SQL),
-    "ev04_gate_calibration": (ev04_gate_calibration, None),  # oracle composed below
-    "ev05_gate_kappa": (ev05_gate_kappa, None),  # oracle composed below
     "tx17_url_normalize": (tx17_url_normalize, TX17_SQL),
     "dc03_semantic_decontaminate": (dc03_semantic_decontaminate, DC03_SQL),
     "px03_pii_density": (px03_pii_density, PX03_SQL),
-    "dd08_dedup_savings": (dd08_dedup_savings, None),  # oracle composed below
     "mm14_resized_thumbs": (mm14_resized_thumbs, MM14_SQL),
     "tk03_vocab_coverage": (tk03_vocab_coverage, TK03_SQL),
     "aj02_asof_directions": (aj02_asof_directions, AJ02_SQL),
     "q07_promo_revenue_share": (q07_promo_revenue_share, Q07_SQL),
-    "ev06_quality_auc": (ev06_quality_auc, None),  # oracle composed below
-    "cf01_cascade_filter": (cf01_cascade_filter, None),  # oracle composed below
-    "gr02_star_components": (gr02_star_components, None),  # oracle composed below
     "ka01_k_anonymity": (ka01_k_anonymity, KA01_SQL),
     "uv01_unpivot_part_attrs": (uv01_unpivot_part_attrs, UV01_SQL),
     "gs01_grouping_sets": (gs01_grouping_sets, GS01_SQL),
@@ -4977,7 +4765,6 @@ QUERIES3 = {
     "bfs01_reach_levels": (bfs01_reach_levels, BFS01_SQL),
     "hh01_threshold_heavy_hitters": (hh01_heavy_hitters, HH01_SQL),
     "sq01_session_transitions": (sq01_session_transitions, SQ01_SQL),
-    "pp02_multimodal_curation": (pp02_multimodal_curation, None),  # oracle composed below
     "mm11_audio_fingerprint_groups": (mm11_audio_fingerprint_groups, MM11_SQL),
     "ws01_weighted_sample": (ws01_weighted_sample, WS01_SQL),
     "tx16_heldout_logprob": (tx16_heldout_logprob, TX16_SQL),
@@ -4989,7 +4776,6 @@ QUERIES3 = {
     "mm12_gif_decode": (mm12_gif_decode, MM12_SQL),
     "mm13_gif_animation_frames": (mm13_gif_animation_frames, MM13_SQL),
     "fm01_orc_roundtrip": (fm01_orc_roundtrip, FM01_SQL),
-    "ks01_keep_best_per_cluster": (ks01_keep_best_per_cluster, None),  # oracle composed below
     "mm10_image_neardup_pairs": (mm10_image_neardup_pairs, MM10_SQL),
     "mm09_image_dhash": (mm09_image_dhash, MM09_SQL),
     "w10_ohlc_bars": (w10_ohlc_bars, W10_SQL),
@@ -5009,7 +4795,6 @@ QUERIES3 = {
     "bm01_bm25_rank": (bm01_bm25_rank, BM01_SQL),
     "ia01_incremental_rollup": (ia01_incremental_rollup, IA01_SQL),
     "tk02_wordpiece_segment": (tk02_wordpiece_segment, TK02_SQL),
-    "ev01_linkage_eval": (ev01_linkage_eval, None),  # oracle composed below
     "qt01_histogram_quantiles": (qt01_histogram_quantiles, QT01_SQL),
     "ii01_inverted_index": (ii01_inverted_index, II01_SQL),
     "gf01_gap_fill": (gf01_gap_fill, GF01_SQL),
@@ -5032,7 +4817,7 @@ QUERIES3 = {
     "f05_country_whitelist": (f05_country_whitelist, F05_SQL),
     "t03_punct_lower_key": (t03_punct_lower_key, T03_SQL),
     "o07_distinct_sorted_filters": (o07_distinct_sorted_filters, O07_SQL),
-    "a03_push_summary": (a03_push_summary, None),  # oracle composed below
+    "a03_push_summary": (a03_push_summary, A03_SQL),
     "a05_error_summary_24h": (a05_error_summary_24h, A05_SQL),
     "u02_idarray_union": (u02_idarray_union, U02_SQL),
     "e03_crosslink_dedup": (e03_crosslink_dedup, E03_SQL),
@@ -5046,83 +4831,3 @@ QUERIES3 = {
     "st04_streaming_dedup": (st04_streaming_dedup, ST04_SQL),
     "mm01_media_features": (mm01_media_features, MM01_SQL),
 }
-
-
-def _finalize() -> None:
-    from pyp_etl_pipeline_spark.driver_queries import J09_SQL  # noqa: PLC0415
-
-    QUERIES3["a03_push_summary"] = (
-        a03_push_summary,
-        f"SELECT action, count(*) AS n_members FROM ({J09_SQL}) GROUP BY 1",
-    )
-
-    from pyp_etl_pipeline_spark.driver_queries_ext import (  # noqa: PLC0415
-        DD02_SQL,
-        DD04_SQL,
-        SH01_SQL,
-    )
-
-    global KS01_SQL
-    KS01_SQL = _ks01_sql(DD04_SQL)
-    QUERIES3["ks01_keep_best_per_cluster"] = (ks01_keep_best_per_cluster, KS01_SQL)
-
-    ev01_sql = f"""
-WITH pred AS (SELECT DISTINCT id_a, id_b FROM ({SH01_SQL})),
-truth AS (SELECT DISTINCT id_a, id_b FROM ({DD02_SQL})),
-j AS (
-  SELECT coalesce(p.id_a, t.id_a) AS id_a,
-         CASE WHEN p.id_a IS NOT NULL THEN 1 END AS in_pred,
-         CASE WHEN t.id_a IS NOT NULL THEN 1 END AS in_truth
-  FROM pred p FULL JOIN truth t ON p.id_a = t.id_a AND p.id_b = t.id_b
-),
-agg AS (
-  SELECT CAST(coalesce(sum(in_pred), 0) AS BIGINT) AS n_pred,
-         CAST(coalesce(sum(in_truth), 0) AS BIGINT) AS n_truth,
-         CAST(sum(CASE WHEN in_pred IS NOT NULL AND in_truth IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS tp
-  FROM j
-),
-m AS (
-  SELECT *,
-         CAST(n_pred - tp AS BIGINT) AS fp, CAST(n_truth - tp AS BIGINT) AS fn,
-         CASE WHEN n_pred > 0 THEN CAST((tp * 1000000) // n_pred AS BIGINT) END AS precision_micro,
-         CASE WHEN n_truth > 0 THEN CAST((tp * 1000000) // n_truth AS BIGINT) END AS recall_micro
-  FROM agg
-)
-SELECT n_pred, n_truth, tp, fp, fn, precision_micro, recall_micro,
-       CASE WHEN precision_micro IS NOT NULL AND recall_micro IS NOT NULL
-                 AND precision_micro + recall_micro > 0
-            THEN CAST((2 * precision_micro * recall_micro) // (precision_micro + recall_micro) AS BIGINT)
-       END AS f1_micro
-FROM m
-"""
-    QUERIES3["ev01_linkage_eval"] = (ev01_linkage_eval, ev01_sql)
-
-    from pyp_etl_pipeline_spark.driver_queries_ext import TX07_SQL, TX11_SQL  # noqa: PLC0415
-
-    QUERIES3["pp02_multimodal_curation"] = (
-        pp02_multimodal_curation,
-        _pp02_sql(TX07_SQL).replace("{MM10_BODY}", MM10_SQL),
-    )
-
-    global EV04_SQL, EV05_SQL, EV06_SQL
-    EV04_SQL = _ev04_sql(TX07_SQL)
-    EV05_SQL = _ev05_sql(TX07_SQL, TX11_SQL)
-    EV06_SQL = _ev06_sql(TX07_SQL)
-    QUERIES3["ev04_gate_calibration"] = (ev04_gate_calibration, EV04_SQL)
-    QUERIES3["ev05_gate_kappa"] = (ev05_gate_kappa, EV05_SQL)
-    QUERIES3["ev06_quality_auc"] = (ev06_quality_auc, EV06_SQL)
-
-    global CF01_SQL
-    CF01_SQL = _cf01_sql(TX07_SQL)
-    QUERIES3["cf01_cascade_filter"] = (cf01_cascade_filter, CF01_SQL)
-
-    from pyp_etl_pipeline_spark.driver_queries_ext import DD04_SQL as _DD04  # noqa: PLC0415
-
-    global DD08_SQL, GR02_SQL
-    DD08_SQL = _dd08_sql(_DD04)
-    QUERIES3["dd08_dedup_savings"] = (dd08_dedup_savings, DD08_SQL)
-    GR02_SQL = _DD04
-    QUERIES3["gr02_star_components"] = (gr02_star_components, GR02_SQL)
-
-
-_finalize()

@@ -11,20 +11,59 @@ contract), and the same md5-based portable hash both engines agree on.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import glob
+import os
+import shutil
+import uuid
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pyp_etl_pipeline_spark import driver_queries as core
+from pyp_etl_pipeline_spark.functions.aggregates import (
+    exact_sum_wide,
+    micro_col,
+    sql_exact_sum_wide,
+)
+from pyp_etl_pipeline_spark.multimodal.av1 import (
+    av1_container_features,
+    av1_seq_features,
+    av1_sequence_header_encode,
+    mp4_av1_encode,
+)
+from pyp_etl_pipeline_spark.multimodal.h264 import (
+    avc_container_features,
+    mp4_avc_encode,
+    sps_encode,
+    sps_features,
+)
+from pyp_etl_pipeline_spark.multimodal.h265 import (
+    hevc_container_features,
+    hevc_sps_encode,
+    hevc_sps_features,
+    mp4_hevc_encode,
+)
 from pyp_etl_pipeline_spark.multimodal.rowmap import synth_media
-from pyp_etl_pipeline_spark.operators import embedding_ops, packing, textan
-from pyp_etl_pipeline_spark.tables import load_table
+from pyp_etl_pipeline_spark.multimodal.vp9 import (
+    mp4_vp9_encode,
+    vp9_container_features,
+    vp9_frame_features,
+    vp9_frame_header_encode,
+)
+from pyp_etl_pipeline_spark.operators import dedup, embedding_ops, packing, textan
+from pyp_etl_pipeline_spark.operators.dedup import word_shingles
+from pyp_etl_pipeline_spark.operators.textan import token_count, whitespace_tokens
+from pyp_etl_pipeline_spark.sources.ingest import (
+    detect_encoding,
+    read_csv_upload,
+    read_excel_distributed,
+)
+from pyp_etl_pipeline_spark.sources.reports import write_report_csv
+from pyp_etl_pipeline_spark.sources.xlsx import write_xlsx
+from pyp_etl_pipeline_spark.streaming.events import read_events_stream, run_to_memory
+from pyp_etl_pipeline_spark.tables import load_corpus, load_corpus_unique, load_table, scratch_path
 
 _TOKS_LOWER = "list_filter(string_split_regex(trim(lower(text)), '\\s+'), w -> w <> '')"
-
-
-def _load_corpus(spark: SparkSession, sf: str, name: str) -> DataFrame:
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus as _lc  # noqa: PLC0415
-
-    return _lc(spark, sf, name)
 
 
 # --------------------------------------------------------------------------
@@ -32,7 +71,7 @@ def _load_corpus(spark: SparkSession, sf: str, name: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def qn01_int8_quantize(spark: SparkSession, sf: str) -> DataFrame:
-    return embedding_ops.int8_quantize_stats(_load_corpus(spark, sf, "embeddings"))
+    return embedding_ops.int8_quantize_stats(load_corpus(spark, sf, "embeddings"))
 
 
 QN01_SQL = """
@@ -70,7 +109,7 @@ FROM q
 # --------------------------------------------------------------------------
 
 def dm01_label_centroid_cosine(spark: SparkSession, sf: str) -> DataFrame:
-    return embedding_ops.label_centroid_cosine(_load_corpus(spark, sf, "embeddings"))
+    return embedding_ops.label_centroid_cosine(load_corpus(spark, sf, "embeddings"))
 
 
 DM01_SQL = """
@@ -120,7 +159,7 @@ FROM pairs
 # --------------------------------------------------------------------------
 
 def fh01_feature_hashing(spark: SparkSession, sf: str) -> DataFrame:
-    return textan.feature_hash_counts(_load_corpus(spark, sf, "documents"))
+    return textan.feature_hash_counts(load_corpus(spark, sf, "documents"))
 
 
 FH01_SQL = f"""
@@ -146,7 +185,7 @@ LIMIT 20
 # --------------------------------------------------------------------------
 
 def tk04_vocab_coverage_curve(spark: SparkSession, sf: str) -> DataFrame:
-    return textan.vocab_coverage_curve(_load_corpus(spark, sf, "documents"))
+    return textan.vocab_coverage_curve(load_corpus(spark, sf, "documents"))
 
 
 TK04_SQL = f"""
@@ -180,7 +219,7 @@ FROM per_k, totals
 # --------------------------------------------------------------------------
 
 def pb01_padding_efficiency(spark: SparkSession, sf: str) -> DataFrame:
-    return packing.padding_efficiency(_load_corpus(spark, sf, "documents"))
+    return packing.padding_efficiency(load_corpus(spark, sf, "documents"))
 
 
 _PB_TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), w -> w <> '')"
@@ -322,10 +361,8 @@ def br01_boolean_retrieval(spark: SparkSession, sf: str) -> DataFrame:
     array_contains conjunction is the equivalence oracle in the unit
     test; the posting shape is what generalizes to dynamic query sets.
     """
-    from pyp_etl_pipeline_spark.operators.textan import token_count, whitespace_tokens  # noqa: PLC0415
-
     terms = list(_BR01_TERMS)
-    d = _load_corpus(spark, sf, "documents").filter(F.col("text").isNotNull())
+    d = load_corpus(spark, sf, "documents").filter(F.col("text").isNotNull())
     staged = d.select(
         "doc_id",
         whitespace_tokens(F.lower(F.col("text"))).alias("__toks"),
@@ -377,14 +414,11 @@ def rp01_corpus_datacard(spark: SparkSession, sf: str) -> DataFrame:
     rollup by source. Null-text docs stay IN the card (0 tokens, never
     dup-matched: a NULL fp fails the equi-join in both engines).
     """
-    from pyp_etl_pipeline_spark.operators import dedup as _dedup  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.operators.textan import token_count  # noqa: PLC0415
-
-    d = _load_corpus(spark, sf, "documents")
+    d = load_corpus(spark, sf, "documents")
     base = d.select(
         "source",
         "lang",
-        F.when(F.col("text").isNotNull(), _dedup.fingerprint("text")).alias("fp"),
+        F.when(F.col("text").isNotNull(), dedup.fingerprint("text")).alias("fp"),
         F.when(F.col("text").isNotNull(), token_count("text"))
         .otherwise(F.lit(0))
         .cast("long")
@@ -472,10 +506,8 @@ def sp03_group_safe_split(spark: SparkSession, sf: str) -> DataFrame:
     (fp, split) distinct + one count-distinct rollup — all hash-
     partitioned on uniformly distributed md5 keys, skew-free.
     """
-    from pyp_etl_pipeline_spark.operators import dedup as _dedup  # noqa: PLC0415
-
-    d = _load_corpus(spark, sf, "documents").filter(F.col("text").isNotNull())
-    fps = d.select(_dedup.fingerprint("text").alias("fp"))
+    d = load_corpus(spark, sf, "documents").filter(F.col("text").isNotNull())
+    fps = d.select(dedup.fingerprint("text").alias("fp"))
     assigned = fps.select(
         "fp",
         F.when(
@@ -533,7 +565,7 @@ def im01_class_weight_plan(spark: SparkSession, sf: str) -> DataFrame:
     integer micro (sklearn's 'balanced' convention). One tiny rollup —
     the weights relation is k rows and broadcasts to the trainer.
     """
-    e = _load_corpus(spark, sf, "embeddings").filter(F.col("label").isNotNull())
+    e = load_corpus(spark, sf, "embeddings").filter(F.col("label").isNotNull())
     per = e.groupBy(F.col("label").cast("long").alias("label")).agg(
         F.count(F.lit(1)).cast("long").alias("n_vecs")
     )
@@ -834,7 +866,6 @@ def cd02_apply_changefeed(spark: SparkSession, sf: str) -> DataFrame:
     e = load_table(spark, sf, "events").filter(
         F.col("event_type").isNotNull() & F.col("ts").isNotNull()
     )
-    from pyspark.sql import Window  # noqa: PLC0415
 
     w = Window.partitionBy("user_id").orderBy(
         F.desc("ts"), F.desc("event_id")
@@ -905,13 +936,6 @@ def st11_streaming_psi_drift(spark: SparkSession, sf: str) -> DataFrame:
     is n_types x 2 x 10 counters: O(1), watermark-free by design
     (complete-mode counts over a categorical grid, not per-key state).
     """
-    import uuid  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.streaming.events import (  # noqa: PLC0415
-        read_events_stream,
-        run_to_memory,
-    )
-
     name = "st11_" + uuid.uuid4().hex[:8]
     stream = read_events_stream(spark, sf).filter(
         F.col("event_type").isNotNull() & F.col("value").isNotNull() & F.col("ts").isNotNull()
@@ -953,11 +977,8 @@ def tx18_zipf_fit(spark: SparkSession, sf: str) -> DataFrame:
     literally-identical IEEE sequence in both engines (int64
     combination overflows once a token count reaches ~1e12).
     Top-100 via TakeOrderedAndProject (never a full-vocab window)."""
-    from pyp_etl_pipeline_spark.operators.textan import whitespace_tokens  # noqa: PLC0415
-    from pyspark.sql import Window  # noqa: PLC0415
-
     counts = (
-        _load_corpus(spark, sf, "documents")
+        load_corpus(spark, sf, "documents")
         .filter(F.col("text").isNotNull())
         .select(F.explode(whitespace_tokens(F.lower(F.col("text")))).alias("tok"))
         .groupBy("tok")
@@ -1052,8 +1073,6 @@ def q10_returned_revenue_topk(spark: SparkSession, sf: str) -> DataFrame:
     BROADCAST, and the global top-20 via orderBy().limit() —
     TakeOrderedAndProject, never a single-partition window. Ties break
     on custkey."""
-    from pyp_etl_pipeline_spark.functions.aggregates import micro_col  # noqa: PLC0415
-
     o = load_table(spark, sf, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-04-01")
     ).select("o_orderkey", "o_custkey")
@@ -1110,11 +1129,7 @@ def ann08_int8_topk(spark: SparkSession, sf: str) -> DataFrame:
     float32, and SIMD-able on a real cluster. Queries broadcast; the
     per-query window is key-partitioned. The unit test measures
     recall@5 against the exact float scan (ann01)."""
-    from pyspark.sql import Window  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus_unique  # noqa: PLC0415
-
-    e = _load_corpus_unique(spark, sf, "embeddings").filter(
+    e = load_corpus_unique(spark, sf, "embeddings").filter(
         F.col("embedding").isNotNull() & (F.size("embedding") > 0)
     )
     xd = F.transform(F.col("embedding"), lambda x: x.cast("double"))
@@ -1208,12 +1223,9 @@ def dd09_containment_pairs(spark: SparkSession, sf: str) -> DataFrame:
     why the prefix filter is the containment scale path. Survivor pairs
     verify with one exact in-memory intersection per candidate.
     """
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus_unique  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.operators.dedup import word_shingles  # noqa: PLC0415
-
     t = 0.8
     t_micro = 800_000
-    d = _load_corpus_unique(spark, sf, "documents").filter(F.col("text").isNotNull())
+    d = load_corpus_unique(spark, sf, "documents").filter(F.col("text").isNotNull())
     docs = d.select(F.col("doc_id").alias("id"), word_shingles("text", 5).alias("sh"))
     sized = docs.select("id", F.size("sh").alias("n_sh"), "sh").filter(F.col("n_sh") > 0)
     # The (shingle -> md5 -> sort) corpus pass feeds FOUR consumers —
@@ -1312,8 +1324,6 @@ def dd09_containment_pairs(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _dd09_sql() -> str:
-    from pyp_etl_pipeline_spark import driver_queries as core  # noqa: PLC0415
-
     toks = f"string_split({core.sql_normalized_text('text')}, ' ')"
     return f"""
 WITH t AS (
@@ -1452,11 +1462,8 @@ def dd10_exact_substring_spans(spark: SparkSession, sf: str) -> DataFrame:
     (``operators/dedup.exact_substring_spans``; generalizes the
     reference's E2/dd06 line dedup to unaligned character spans). The
     twin replays the identical gram/extension arithmetic."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus_unique  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.operators import dedup as _dedup  # noqa: PLC0415
-
-    d = _load_corpus_unique(spark, sf, "documents")
-    return _dedup.exact_substring_spans(d, gram=40)
+    d = load_corpus_unique(spark, sf, "documents")
+    return dedup.exact_substring_spans(d, gram=40)
 
 
 DD10_SQL = """
@@ -1492,15 +1499,11 @@ def tx19_token_entropy(spark: SparkSession, sf: str) -> DataFrame:
     at high length = repetitive junk the fixed-n repetition window
     (tx05) can miss; abnormally high = mojibake/noise. Two per-doc
     hash aggregates, no corpus pass (operators/textan.token_entropy)."""
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus  # noqa: PLC0415
-
-    out = textan.token_entropy(_load_corpus(spark, sf, "documents"))
+    out = textan.token_entropy(load_corpus(spark, sf, "documents"))
     return out.withColumnRenamed("id", "doc_id")
 
 
 def _tx19_sql() -> str:
-    from pyp_etl_pipeline_spark import driver_queries as core  # noqa: PLC0415
-
     return f"""
 WITH t AS (
   SELECT doc_id, unnest(string_split({core.sql_normalized_text("text")}, ' ')) AS tok
@@ -1535,8 +1538,6 @@ def gt01_grand_total_wide(spark: SparkSession, sf: str) -> DataFrame:
     aggregation, exact to 1e32 units, HUGEINT twin) instead of the
     per-key long path the rest of the registry uses. Three coarse
     groups — one map-side-combined shuffle, no skew exposure."""
-    from pyp_etl_pipeline_spark.functions.aggregates import exact_sum_wide  # noqa: PLC0415
-
     li = load_table(spark, sf, "lineitem").select(
         "l_returnflag",
         "l_extendedprice",
@@ -1550,8 +1551,6 @@ def gt01_grand_total_wide(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _gt01_sql() -> str:
-    from pyp_etl_pipeline_spark.functions.aggregates import sql_exact_sum_wide
-
     return f"""
 SELECT l_returnflag,
        CAST(count(*) AS BIGINT) AS n_items,
@@ -1583,8 +1582,6 @@ def mm15_h264_sps_metadata(spark: SparkSession, sf: str) -> DataFrame:
     high-profile chroma branch — breaks the hash. Pixel decode of
     inter-frame video remains behind the plugin seam; this is the
     metadata tier a 100 TB pipeline routes on."""
-    from pyp_etl_pipeline_spark.multimodal.h264 import sps_encode, sps_features  # noqa: PLC0415
-
     d = load_table(spark, sf, "documents").select("doc_id")
     media = synth_media(
         d,
@@ -1635,11 +1632,6 @@ def mm16_mp4_avcc_qa(spark: SparkSession, sf: str) -> DataFrame:
     the ``dims_match`` QA flag exists to catch. The twin is fully
     analytic, so any box-walk offset drift (the 78-byte VisualSampleEntry
     skip, the stsd FullBox header) or SPS bit-parse bug breaks the hash."""
-    from pyp_etl_pipeline_spark.multimodal.h264 import (  # noqa: PLC0415
-        avc_container_features,
-        mp4_avc_encode,
-    )
-
     def mp4(i: int) -> bytes:
         w, h = 16 + (i % 952) * 2, 16 + (i % 532) * 2
         return mp4_avc_encode(
@@ -1703,11 +1695,6 @@ def mm17_hevc_sps_metadata(spark: SparkSession, sf: str) -> DataFrame:
     missed emulation strip breaks the hash. Pixel decode stays behind
     the plugin seam; see tests/test_h265.py for the hand-assembled
     spec golden covering the RPS/PCM/scaling-list branches."""
-    from pyp_etl_pipeline_spark.multimodal.h265 import (  # noqa: PLC0415
-        hevc_sps_encode,
-        hevc_sps_features,
-    )
-
     d = load_table(spark, sf, "documents").select("doc_id")
     media = synth_media(
         d,
@@ -1760,11 +1747,6 @@ def mm18_mp4_hvcc_qa(spark: SparkSession, sf: str) -> DataFrame:
     display dims (tkhd) against stream coded-minus-crop dims — every
     7th doc is synthesized with inflated display dims, the corruption
     the ``dims_match`` QA flag exists to catch. Fully analytic twin."""
-    from pyp_etl_pipeline_spark.multimodal.h265 import (  # noqa: PLC0415
-        hevc_container_features,
-        mp4_hevc_encode,
-    )
-
     def mp4(i: int) -> bytes:
         w, h = 16 + (i % 952) * 2, 16 + (i % 532) * 2
         return mp4_hevc_encode(
@@ -1829,11 +1811,6 @@ def mm19_av1_seq_metadata(spark: SparkSession, sf: str) -> DataFrame:
     Analytic twin: any leb128/operating-point/color-config drift breaks
     the hash. See tests/test_av1.py for the hand-assembled spec golden
     covering multi-op tables, decoder model, and reduced headers."""
-    from pyp_etl_pipeline_spark.multimodal.av1 import (  # noqa: PLC0415
-        av1_seq_features,
-        av1_sequence_header_encode,
-    )
-
     d = load_table(spark, sf, "documents").select("doc_id")
     media = synth_media(
         d,
@@ -1893,11 +1870,6 @@ def mm20_mp4_av1c_qa(spark: SparkSession, sf: str) -> DataFrame:
     the record's profile/level prefix vs the stream's own values
     (``record_matches`` — muxers get this wrong in real corpora).
     Fully analytic twin."""
-    from pyp_etl_pipeline_spark.multimodal.av1 import (  # noqa: PLC0415
-        av1_container_features,
-        mp4_av1_encode,
-    )
-
     def mp4(i: int) -> bytes:
         w, h = 16 + (i % 952) * 2, 16 + (i % 532) * 2
         return mp4_av1_encode(
@@ -1968,8 +1940,6 @@ def qa01_daily_quota_ledger(spark: SparkSession, sf: str) -> DataFrame:
     ambiguity impossible by construction. Day buckets use the
     epoch-floor contract (cast-to-long + floor-of-double-division), so
     pre-1970 timestamps land one bucket correctly on both engines."""
-    from pyspark.sql import Window  # noqa: PLC0415
-
     e = load_table(spark, sf, "events")
     ts_s = F.col("ts").cast("long")
     day = F.floor(ts_s / F.lit(86400.0)).cast("long")
@@ -2054,14 +2024,6 @@ def xl01_xlsx_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     deterministic under duplicates and independent of row order on
     both engines). Every sf the gate runs today (<= 0.1) is fully
     below the cap, so the certified content is unchanged there."""
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.driver_queries_ext import scratch_path  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.functions.aggregates import micro_col  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.sources.ingest import read_excel_distributed  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.sources.xlsx import write_xlsx  # noqa: PLC0415
-
     d = scratch_path("xl01_upload")
     shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d, exist_ok=True)
@@ -2119,14 +2081,6 @@ def xl02_xlsx_sidecar_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     certify byte-identical output across the two physical strategies —
     range splitting, header-drop in range 0, fragment re-parse, and the
     offset index itself."""
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.driver_queries_ext import scratch_path  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.functions.aggregates import micro_col  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.sources.ingest import read_excel_distributed  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.sources.xlsx import write_xlsx  # noqa: PLC0415
-
     d = scratch_path("xl02_upload")
     shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d, exist_ok=True)
@@ -2180,14 +2134,6 @@ def cv01_csv_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     that documented loss (`NULLIF(TRIM(seg), '')`), so the hash
     certifies the real S2 semantics, quoting/escaping, and the double
     shortest-repr rendering (write -> cast back is exact)."""
-    import glob  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.driver_queries_ext import scratch_path  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.functions.aggregates import micro_col  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.sources.ingest import read_csv_upload  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.sources.reports import write_report_csv  # noqa: PLC0415
-
     d = scratch_path("cv01_report")
     shutil.rmtree(d, ignore_errors=True)
     write_report_csv(
@@ -2242,14 +2188,6 @@ def cv02_csv_nonutf8_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     The hash additionally certifies byte-exact accent round-trip
     (sum of char codepoints) and the cv01 loss contract (writer trims
     leading whitespace; NULL survives as unquoted empty)."""
-    import glob  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-
-    from pyp_etl_pipeline_spark.driver_queries_ext import scratch_path  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.functions.aggregates import micro_col  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.sources.ingest import detect_encoding, read_csv_upload  # noqa: PLC0415
-    from pyp_etl_pipeline_spark.sources.reports import write_report_csv  # noqa: PLC0415
-
     d = scratch_path("cv02_report")
     shutil.rmtree(d, ignore_errors=True)
     marked = load_table(spark, sf, "customer").select(
@@ -2317,11 +2255,6 @@ def mm21_vp9_frame_metadata(spark: SparkSession, sf: str) -> DataFrame:
     branch, frame + render dimensions). Analytic twin: any
     profile/color-config/frame-size drift breaks the hash. See
     tests/test_vp9.py for the hand-assembled spec golden."""
-    from pyp_etl_pipeline_spark.multimodal.vp9 import (  # noqa: PLC0415
-        vp9_frame_features,
-        vp9_frame_header_encode,
-    )
-
     def frame(i: int) -> bytes:
         profile = i % 4
         rgb = profile in (1, 3) and i % 11 == 0
@@ -2392,11 +2325,6 @@ def mm22_mp4_vpcc_qa(spark: SparkSession, sf: str) -> DataFrame:
     AND mdat frame header, and cross-validates container display dims vs
     coded dims (every 7th doc inflated) plus record fields vs the
     stream's own header (``record_matches``). Fully analytic twin."""
-    from pyp_etl_pipeline_spark.multimodal.vp9 import (  # noqa: PLC0415
-        mp4_vp9_encode,
-        vp9_container_features,
-    )
-
     levels = [10, 11, 20, 21, 30, 31, 40, 41, 50, 51, 52, 60, 61, 62]
 
     def mp4(i: int) -> bytes:

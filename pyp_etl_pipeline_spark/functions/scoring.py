@@ -183,8 +183,8 @@ def dice_token_score(a: Column | str, b: Column | str) -> Column:
 # ---------------------------------------------------------------- penalties
 
 def _count_special(c: Column) -> Column:
-    # count of chars in !@#$%^&*() — length minus length-with-them-removed
-    return F.length(c) - F.length(F.regexp_replace(c, r"[!@#$%^&*()]", ""))
+    # count of chars in S.SPECIAL_CHARS — length minus length-with-them-removed
+    return F.length(c) - F.length(F.regexp_replace(c, f"[{S.SPECIAL_CHARS}]", ""))
 
 
 def _has_dietary(c: Column) -> Column:

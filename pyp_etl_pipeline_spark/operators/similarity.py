@@ -101,7 +101,7 @@ def _hyperplanes(dim: int, n_planes: int, seed: str = "pyp-lsh") -> list[list[fl
 
 def _lit_double_array(vals) -> Column:
     """array<double> constant via one parsed SQL string (the fast-literal
-    path — see ``_lit_long_array``). ``repr`` is the shortest decimal
+    path — see ``_sql_long_array``). ``repr`` is the shortest decimal
     that round-trips the double, and Spark's decimal->double cast is
     correctly rounded, so every value is bit-exact; the one exception is
     -0.0 (the parser reads ``-0.0`` as decimal and drops the sign), kept
@@ -389,17 +389,14 @@ def _micro_vec(c: Column) -> Column:
 
 
 def _sql_long_array(vals) -> str:
+    """SQL text of an array<bigint> constant, for building constants by
+    PARSING one SQL string instead of converting elements one-by-one
+    through py4j: ``F.lit(list)`` pays a JVM round trip per element
+    (~0.5 s for a 512-cell matrix, measured — it dominated ANN query
+    CONSTRUCTION time), while one ``F.expr`` call ships the whole thing
+    and Catalyst constant-folds it to the identical Literal node
+    (verified plan-identical)."""
     return "array(" + ",".join(f"{int(v)}L" for v in vals) + ")"
-
-
-def _lit_long_array(vals) -> Column:
-    """array<bigint> constant built by PARSING one SQL string instead of
-    converting elements one-by-one through py4j: ``F.lit(list)`` pays a
-    JVM round trip per element (~0.5 s for a 512-cell matrix, measured —
-    it dominated ANN query CONSTRUCTION time), while one ``F.expr`` call
-    ships the whole thing and Catalyst constant-folds it to the
-    identical Literal node (verified plan-identical)."""
-    return F.expr(_sql_long_array(vals))
 
 
 def _matrix_lit(centroids: list[list[int]]) -> Column:
@@ -409,7 +406,7 @@ def _matrix_lit(centroids: list[list[int]]) -> Column:
     dominant cost of every small fit job (512+ nodes per argmin, re-
     analyzed per job); a single Literal is O(1) nodes regardless of k
     and dim, and the arithmetic moves into a ``transform`` over it.
-    Built via one parsed SQL string (see ``_lit_long_array``), which
+    Built via one parsed SQL string (see ``_sql_long_array``), which
     constant-folds to the same Literal at a tenth of the py4j cost."""
     return F.expr("array(" + ",".join(_sql_long_array(c) for c in centroids) + ")")
 
@@ -420,10 +417,6 @@ def _sq_l2(xm: Column, cm: Column) -> Column:
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-
-
-def _kmeans_dist(xm: Column, centroid: list[int]) -> Column:
-    return _sq_l2(xm, _lit_long_array(centroid))
 
 
 def _kmeans_argmin(xm: Column, centroids: list[list[int]]) -> Column:
@@ -468,7 +461,7 @@ def _sql_cand_fast(xm_sql: str, centroids: list[list[int]]) -> str:
     )
 
 
-def _kmeans_argmin_fast(xm: Column | str, centroids: list[list[int]]) -> Column:
+def _kmeans_argmin_fast(xm: str, centroids: list[list[int]]) -> Column:
     """Selection-identical to ``_kmeans_argmin`` (same winner, same tie
     rule) but with the row-constant ||x||^2 term of the squared L2
     dropped: d' = ||c||^2 - 2<x, c>. Subtracting the same value from
@@ -479,29 +472,10 @@ def _kmeans_argmin_fast(xm: Column | str, centroids: list[list[int]]) -> Column:
     ``["c"]`` — the d' values are shifted and must never be exposed
     (``assign_clusters`` keeps the exact-distance variant).
 
-    ``xm`` may be a Column or a SQL expression STRING; the string form
-    builds the whole tree through one ``F.expr`` parse (the fast path —
-    hot callers construct these trees m+1 times per query)."""
-    if isinstance(xm, str):
-        return F.expr(f"array_min({_sql_cand_fast(xm, centroids)})")
-    norms = _lit_long_array(sum(int(v) * int(v) for v in c) for c in centroids)
-    return F.array_min(
-        F.transform(
-            _matrix_lit(centroids),
-            lambda c, j: F.struct(
-                (
-                    F.element_at(norms, j + 1)
-                    - 2
-                    * F.aggregate(
-                        F.zip_with(xm, c, lambda a, b: a * b),
-                        F.lit(0).cast("long"),
-                        lambda acc, x: acc + x,
-                    )
-                ).alias("d"),
-                j.cast("int").alias("c"),
-            ),
-        )
-    )
+    ``xm`` is a SQL expression STRING: the whole tree builds through one
+    ``F.expr`` parse (hot callers construct these trees m+1 times per
+    query)."""
+    return F.expr(f"array_min({_sql_cand_fast(xm, centroids)})")
 
 
 def kmeans_fit(

@@ -28,11 +28,6 @@ def write_report_csv(
     writer.csv(out_dir)
 
 
-def write_error_report(errors: DataFrame, out_dir: str, row_col: str = "row_id", error_col: str = "error") -> None:
-    """S11: (Row, Error) CSV of validation failures."""
-    write_report_csv(errors.select(F.col(row_col).alias("Row"), F.col(error_col).alias("Error")), out_dir)
-
-
 def truncate_dir(path: str) -> None:
     """S12: clear a staging directory (overwrite-style reset)."""
     shutil.rmtree(path, ignore_errors=True)

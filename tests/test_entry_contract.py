@@ -85,23 +85,41 @@ def test_spark_oracle_column_names_align(spark, sf_dir):
 def test_registry_complete_under_either_import_order():
     """Every registry query must carry its oracle regardless of which
     driver_queries module is imported first (the cross-module composed
-    oracles — a03/ev01/pp02 — once raced the REGISTRY snapshot)."""
+    oracles once raced the REGISTRY snapshot), the import graph is one-way
+    (parts 3 and 4 load without the registry module), and both import
+    orders yield the same oracle text."""
+    import json
+    import os
     import subprocess
     import sys
 
-    code = (
-        "import sys; sys.path.insert(0, '/root/repo');"
-        "import pyp_etl_pipeline_spark.driver_queries_ext3 as m3;"
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ext = "pyp_etl_pipeline_spark.driver_queries_ext"
+    parts = (
+        "import pyp_etl_pipeline_spark.driver_queries_ext3, pyp_etl_pipeline_spark.driver_queries_ext4;"
+        f"assert {ext!r} not in sys.modules, 'part 3/4 imported the registry module';"
+    )
+    dump = (
         "from pyp_etl_pipeline_spark import driver_queries_ext as m;"
         "qs, os_ = m.queries(), m.oracle_sql();"
         "missing = sorted(set(qs) - set(os_));"
-        "assert not missing, missing; print(len(qs), len(os_))"
+        "assert not missing, missing; print(json.dumps(os_))"
     )
-    out = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True, cwd="/tmp", check=True
-    )
-    n_q, n_o = out.stdout.split()
-    assert n_q == n_o
+    # p01's twin lists each field's alias set in set-iteration order, so
+    # its text is stable only under one string-hash seed
+    env = {**os.environ, "PYTHONHASHSEED": "0"}
+
+    def oracle(first: str) -> dict[str, str]:
+        code = f"import json, sys; sys.path.insert(0, {repo!r});" + first + dump
+        out = subprocess.run(
+            [sys.executable, "-c", code], capture_output=True, text=True, cwd="/tmp",
+            env=env, check=True,
+        )
+        return json.loads(out.stdout)
+
+    parts_first, registry_first = oracle(parts), oracle("")
+    assert len(parts_first) == len(registry_first) >= 230
+    assert parts_first == registry_first
 
 
 def test_bench_query_names_resolve():

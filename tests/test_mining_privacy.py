@@ -363,7 +363,7 @@ def test_tk03_coverage_invariants(spark):
 
 def test_ev06_auc_replay(spark):
     from pyp_etl_pipeline_spark.driver_queries_ext3 import ev06_quality_auc
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus
+    from pyp_etl_pipeline_spark.tables import load_corpus as _load_corpus
     from pyp_etl_pipeline_spark.operators import textan as _t
 
     r = ev06_quality_auc(spark, "/root/testdata/sf0.001").collect()[0]
@@ -386,7 +386,7 @@ def test_ev06_auc_replay(spark):
 
 def test_cf01_cascade_soundness(spark):
     from pyp_etl_pipeline_spark.driver_queries_ext3 import cf01_cascade_filter
-    from pyp_etl_pipeline_spark.driver_queries_ext import _load_corpus
+    from pyp_etl_pipeline_spark.tables import load_corpus as _load_corpus
     from pyp_etl_pipeline_spark.operators import textan as _t
 
     r = cf01_cascade_filter(spark, "/root/testdata/sf0.001").collect()[0]

@@ -10,7 +10,7 @@ import subprocess
 import sys
 import threading
 
-from pyp_etl_pipeline_spark import driver_queries_ext as dqe
+from pyp_etl_pipeline_spark import tables
 
 
 def test_scratch_paths_swept_at_interpreter_exit(tmp_path):
@@ -19,7 +19,7 @@ def test_scratch_paths_swept_at_interpreter_exit(tmp_path):
     removed it — the real contract, not a unit proxy."""
     code = (
         "import os\n"
-        "from pyp_etl_pipeline_spark.driver_queries_ext import scratch_path\n"
+        "from pyp_etl_pipeline_spark.tables import scratch_path\n"
         "p = scratch_path('atexit_pin')\n"
         "os.makedirs(p, exist_ok=True)\n"
         "open(os.path.join(p, 'x.txt'), 'w').write('scratch')\n"
@@ -36,12 +36,12 @@ def test_scratch_paths_swept_at_interpreter_exit(tmp_path):
 
 
 def test_scratch_path_registered_and_sweep_idempotent(tmp_path):
-    p = dqe.scratch_path("sweep_unit")
+    p = tables.scratch_path("sweep_unit")
     os.makedirs(p, exist_ok=True)
-    assert p in dqe._SCRATCH_PATHS
-    dqe._sweep_scratch()
+    assert p in tables._SCRATCH_PATHS
+    tables._sweep_scratch()
     assert not os.path.exists(p)
-    dqe._sweep_scratch()  # second sweep on missing dirs must not raise
+    tables._sweep_scratch()  # second sweep on missing dirs must not raise
 
 
 class _DeadHandle:
@@ -60,15 +60,15 @@ def test_corpus_cache_evicts_stopped_sessions(spark, sf_dir):
     entry must be evicted — without stopping the suite's shared
     session."""
     dead_key = ("app-stopped-pin", "/nonexistent", "documents")
-    with dqe._UNIQUE_LOCK:
-        dqe._UNIQUE_CACHE[dead_key] = _DeadHandle()
+    with tables._UNIQUE_LOCK:
+        tables._UNIQUE_CACHE[dead_key] = _DeadHandle()
 
     results = []
     errors = []
 
     def hit():
         try:
-            results.append(dqe._load_corpus_unique(spark, sf_dir, "documents"))
+            results.append(tables.load_corpus_unique(spark, sf_dir, "documents"))
         except Exception as e:  # noqa: BLE001 — collected for the assert
             errors.append(e)
 
@@ -80,11 +80,11 @@ def test_corpus_cache_evicts_stopped_sessions(spark, sf_dir):
 
     assert not errors, errors
     assert len({id(df) for df in results}) == 1  # one shared materialization
-    with dqe._UNIQUE_LOCK:
-        assert dead_key not in dqe._UNIQUE_CACHE
+    with tables._UNIQUE_LOCK:
+        assert dead_key not in tables._UNIQUE_CACHE
         live_key = (
             spark.sparkContext.applicationId,
             os.path.abspath(sf_dir),
             "documents",
         )
-        assert live_key in dqe._UNIQUE_CACHE
+        assert live_key in tables._UNIQUE_CACHE

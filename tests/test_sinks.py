@@ -130,7 +130,7 @@ def test_plan_compaction_contiguous_target_groups(spark):
 
 
 def test_scratch_path_stable_within_process_and_tagged():
-    from pyp_etl_pipeline_spark.driver_queries_ext import scratch_path
+    from pyp_etl_pipeline_spark.tables import scratch_path
 
     a, b = scratch_path("tag_a"), scratch_path("tag_b")
     assert a != b and a.startswith("/") and "tag_a" in a
